@@ -1,6 +1,6 @@
 #!/bin/bash
 # Direct-JVM runner for the dev mains (Bench / Verify / StateProbe /
-# ScaleFixture / SketchBench) against the sbt-compiled classes — each
+# ScaleFixture / DeltaLshCycle) against the sbt-compiled classes — each
 # isolated fresh-JVM measurement would otherwise pay ~20-30 s of sbt
 # launch, which pollutes exactly the numbers the isolation protocol
 # exists to clean up. Classpath = compiled classes + the image's Spark

@@ -193,49 +193,6 @@ object ScaleFixture {
   }
 }
 
-/** Dev tool: time the sketch pipeline's native-expression path against
-  * its UDF twin on the same corpus (SURVEY §6's dedup-family cut).
-  *
-  * Usage: runMain graft.SketchBench <sfDir>
-  */
-object SketchBench {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-sketch-bench")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    import graft.functions.{MinhashSig, ShingleGramHashes, SimHash64, Text}
-    val docs = graft.sources.Tables.documents(spark, dir).select($"text")
-    docs.write.format("noop").mode("overwrite").save() // page-fault warmup
-    def time(label: String)(df: org.apache.spark.sql.DataFrame): Double = {
-      // one warm pass then three measured, best-of (JIT settles)
-      df.write.format("noop").mode("overwrite").save()
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"$label%-14s ${ts.min}%.3f s (best of 3)")
-      ts.min
-    }
-    val native = time("native") {
-      docs.select(MinhashSig(ShingleGramHashes($"text")).as("sig"),
-        SimHash64(ShingleGramHashes($"text")).as("sh"))
-    }
-    val viaUdf = time("udf") {
-      docs.select(Text.minhashSigUdf(Text.shingleHashesFastUdf($"text")).as("sig"),
-        Text.simhashUdf(Text.shingleHashesFastUdf($"text")).as("sh"))
-    }
-    println(f"""{"native_sec":$native%.3f,"udf_sec":$viaUdf%.3f,"speedup":${viaUdf / native}%.2f}""")
-    spark.stop()
-  }
-}
-
 /** Dev tool behind SURVEY §6's delta-LSH bounded-state decade: drive
   * the CONTINUOUS LSH dedup gate through a full feed → compact →
   * restart cycle at fixture scale, recording state rows/bytes per
@@ -388,132 +345,6 @@ object DeltaLshCycle {
   }
 }
 
-/** Dev tool (r15, verdict item 4): itemize `q_stream_audit`'s wall —
-  * N isolated runs each of (a) the full ladder, (b) the ladder with the
-  * near rung's sketch + band probe switched off (the measurement-only
-  * `nearRung=false` flag), and (c) `q_stream_pii` as the harness+source
-  * floor (same readStream → memory-sink AvailableNow shape, one
-  * stateless map). full−noNear ≈ the near rung (sketch+probe+fold);
-  * noNear−pii ≈ the three stateless gate probes; pii ≈ harness. One
-  * JSON line per run; a warm-up pass of each variant runs first so JIT
-  * and dump staging bill nobody.
-  *
-  * Usage: runMain graft.AuditItemize <sfDir> [runs]
-  */
-object AuditItemize {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val runs = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-audit-itemize")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val variants: Seq[(String, () => Long)] = Seq(
-      "audit_full" -> (() =>
-        graft.operators.StreamQueries.streamAudit(spark, dir).count()),
-      "audit_no_near" -> (() =>
-        graft.operators.StreamQueries.streamAudit(spark, dir,
-          nearRung = false).count()),
-      "pii_floor" -> (() =>
-        graft.operators.StreamQueries.streamPii(spark, dir).count()))
-    variants.foreach { case (_, f) => f() } // warm-up: JIT + dumps
-    (1 to runs).foreach { r =>
-      variants.foreach { case (name, f) =>
-        val t0 = System.nanoTime()
-        val n = f()
-        println(s"""{"variant":"$name","run":$r,"sec":${
-          (System.nanoTime() - t0) / 1e9},"rows":$n}""")
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Dev tool (r15, verdict item 1): candidate-stream itemization for
-  * the SimHash clique collapse — doc-level vs signature-level blocking
-  * volumes for both sketch variants at an arbitrary fixture, the
-  * numbers behind decades_r15 Section B.
-  *
-  * Usage: runMain graft.SimhashCandProbe <sfDir>
-  */
-object SimhashCandProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-simhash-cand-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    import graft.sources.Tables
-
-    // the SAME block expression the shipped plans use (r16 review: a
-    // third hand-copy here could silently measure a different scheme)
-    def blockCols(sigCol: String) =
-      graft.operators.Dedup.simhashBlockCols(col(sigCol))
-
-    def report(name: String, sigs: org.apache.spark.sql.DataFrame): Unit = {
-      sigs.cache().count()
-      val docBlocked = sigs.select($"doc_id", $"sig", blockCols("sig").as("e"))
-        .select($"doc_id", $"e.blk", $"e.bh")
-      val docCand = docBlocked.as("a").join(docBlocked.as("b"),
-        $"a.blk" === $"b.blk" && $"a.bh" === $"b.bh" &&
-          $"a.doc_id" < $"b.doc_id").count()
-      val reps = sigs.groupBy($"sig").agg(count(lit(1)).as("c"))
-      val nSigs = reps.count()
-      val repBlocked = reps.select($"sig", blockCols("sig").as("e"))
-        .select($"sig", $"e.blk", $"e.bh")
-      val repCand = repBlocked.as("a").join(repBlocked.as("b"),
-        $"a.blk" === $"b.blk" && $"a.bh" === $"b.bh" &&
-          $"a.sig" < $"b.sig").count()
-      val maxClique = reps.agg(max($"c")).head().getLong(0)
-      println(s"[cand] $name docs=${sigs.count()} distinct_sigs=$nSigs " +
-        s"max_sig_clique=$maxClique doc_level_candidates=$docCand " +
-        s"sig_level_candidates=$repCand")
-      sigs.unpersist()
-    }
-
-    report("mm_simhash(byte-gram)", Tables.documents(spark, dir)
-      .select($"doc_id", encode($"text", "UTF-8").as("payload"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, p) =>
-        (id, graft.functions.Text.simhash64(
-          graft.operators.Multimodal.byteGramHashes(p)))
-      }.toDF("doc_id", "sig"))
-    report("dedup_simhash(word-shingle)", Tables.documents(spark, dir)
-      .select($"doc_id", graft.functions.SimHash64(
-        graft.functions.ShingleGramHashes($"text")).as("sig")))
-    spark.stop()
-  }
-}
-
-/** Dev tool (r15, verdict item 6): driver-local CellIndex coarse-train
-  * wall at synthetic codebook sizes — the measurement behind
-  * `CellIndex.MaxDriverTrainK`'s pinned boundary.
-  *
-  * Usage: runMain graft.CoarseTrainProbe
-  */
-object CoarseTrainProbe {
-  def main(args: Array[String]): Unit = {
-    val dim = 64
-    val rnd = new scala.util.Random(11)
-    for (k <- Seq(10000, 30000, 100000, 300000)) {
-      val fine = Array.fill(k)(Array.fill(dim)(rnd.nextDouble()))
-      val t0 = System.nanoTime()
-      val idx = graft.operators.Similarity.CellIndex.of(fine)
-      println(f"[coarse] k=$k%7d kc=${idx.coarse.length}%5d " +
-        f"wall=${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
-  }
-}
-
 /** Dev tool: run a streaming harness query and print its final
   * StreamingQueryProgress — the state-store row/byte counts behind
   * SURVEY §6's O(log²W) DGIM state audit.
@@ -537,338 +368,4 @@ object StateProbe {
       graft.operators.StreamQueries.lastProgress.getOrElse("null")}}""")
     spark.stop()
   }
-}
-
-/** Dev tool (r16, r15 verdict item 5): stage itemization of
-  * `dedup_containment`'s zero-join plan — times each named sub-plan
-  * ([[graft.operators.Dedup.containmentPlan]]: shingle explode →
-  * bounded posting agg → lazy pair stream → pair-count agg → verified)
-  * with an independent count, so the marginal deltas attribute the
-  * row's wall (and the in-suite vs isolated gap) to a stage instead of
-  * a guess. Each count re-executes its upstream (no caching — the
-  * point is the operator's own cost shape), so stage k's marginal is
-  * t(k) − t(k−1) — with ONE caveat under the r16 plan (review find):
-  * the grouped stage internally derives `base` TWICE (the df-count
-  * pass and the anti-join's left side), so t(posting_agg) −
-  * t(base_explode) OVERSTATES the collector machinery by about one
-  * extra base pass (~19 s at 100×). A warm-up pass of the full plan
-  * runs first.
-  *
-  * Usage: runMain graft.ContainmentProbe <sfDir> [runs]
-  */
-object ContainmentProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val runs = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-containment-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val plan = graft.operators.Dedup.containmentPlan(spark, dir)
-    val stages: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
-      "base_explode" -> plan.base,
-      "posting_agg" -> plan.grouped,
-      "pair_stream" -> plan.pairStream,
-      "pair_agg" -> plan.co,
-      "verified" -> plan.verified)
-    plan.verified.count() // warm-up: JIT + parquet footer cache
-    (1 to runs).foreach { r =>
-      stages.foreach { case (name, df) =>
-        val t0 = System.nanoTime()
-        val n = df.count()
-        println(s"""{"stage":"$name","run":$r,"sec":${
-          (System.nanoTime() - t0) / 1e9},"rows":$n}""")
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Dev tool (r16, r15 verdict item 5 follow-through): the containment
-  * stage probe attributed the row's 100× wall to the POSTING
-  * AGGREGATION (the CappedPostings typed-Aggregator groupBy: ~50-60 s
-  * marginal over the 19 s shingle explode), NOT the pair stream the
-  * scaladoc blamed (double-explode marginal ≈ 0). This probe times the
-  * collector variants that could replace it, same fixture, same
-  * upstream:
-  *   count_floor — groupBy(s).count(): the exchange+agg machinery floor
-  *   udaf        — the r15 CappedPostings collector (retired by this
-  *                 probe's measurement; kept HERE as a local class so
-  *                 the comparison stays reproducible)
-  *   collect     — native collect_list + post-hoc size filter (the
-  *                 UNSHIPPABLE baseline: unbounded hot-group buffers)
-  *   shipped     — the r16 plan: df-count pass → anti-join hot
-  *                 shingles → native collect_list (bounded BY
-  *                 CONSTRUCTION: no group above cap ever reaches the
-  *                 collector; ≈ the machinery floor because the
-  *                 anti-join's SMJ pre-sorts the rows the fallback
-  *                 sort-aggregation needs anyway)
-  *
-  * Measured at the 100× fixture (decades_r16 Section E): floor
-  * 47.6-49.6 s, udaf 74.7-80.1, collect 75.4-77.0, shipped 47.9-51.7.
-  *
-  * Usage: runMain graft.PostingAggProbe <sfDir> [runs]
-  */
-object PostingAggProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val runs = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-posting-agg-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val plan = graft.operators.Dedup.containmentPlan(spark, dir)
-    val base = plan.base
-    val cap = graft.operators.Dedup.containmentDfCapFor(
-      graft.sources.Tables.documents(spark, dir).count())
-    val collector = udaf(new CappedPostings(
-        math.min(cap, Int.MaxValue.toLong).toInt),
-      org.apache.spark.sql.Encoders.product[(Long, Long)])
-    val variants: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
-      "base_explode" -> base,
-      "count_floor" -> base.groupBy($"s").count(),
-      "udaf" -> base.groupBy($"s")
-        .agg(collector($"doc_id", $"n").as("ds")).filter(!$"ds.over"),
-      "collect" -> base.groupBy($"s")
-        .agg(collect_list(struct($"doc_id".as("id"), $"n")).as("es"))
-        .filter(size($"es") <= cap),
-      "shipped" -> plan.grouped)
-    variants.foreach { case (_, df) => df.count() } // warm-up
-    (1 to runs).foreach { r =>
-      variants.foreach { case (name, df) =>
-        val t0 = System.nanoTime()
-        val n = df.count()
-        println(s"""{"variant":"$name","run":$r,"sec":${
-          (System.nanoTime() - t0) / 1e9},"rows":$n}""")
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Dev tool (r17, r16 verdict item 1): full-row A/B of
-  * `dedup_containment`'s grouping shapes — the r16 two-pass collector
-  * re-derives the scan+shingle-explode once per consumer (the df-count
-  * pass and the anti-join's left side each consume `base`, ~20 s at
-  * 100×), and this probe adjudicates the two candidate cures against
-  * the shipped shape on the FULL row (verified.count — the r16 lesson:
-  * the collector rewrite's 27 s stage win shrank to ~13 s at the row
-  * because the extra base pass clawed half back; stage deltas lie):
-  *   anti    — shipped r16 shape (two base passes + hot anti-join)
-  *   window  — one base pass: df rides count(*) OVER (PARTITION BY s)
-  *             on the same exchange+sort the collector needs; filter
-  *             df<=cap BEFORE any list materializes; same-partitioning
-  *             collect_list (zero joins, zero second exchange)
-  *   persist — the anti shape over a persisted slim base (one
-  *             materialization, two cached reads); the probe clears the
-  *             cache after each run so every run pays materialization
-  * Variants are interleaved per run (a/w/p, a/w/p, ...) so the box's
-  * drift brackets every arm — the only valid A/B on this box
-  * (decades_r16 Section A).
-  *
-  * Usage: runMain graft.ContainmentShapeProbe <sfDir> [runs]
-  */
-object ContainmentShapeProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val runs = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-containment-shape-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val variants = Seq("anti", "window", "persist")
-    // warm-up: JIT + parquet footer cache, shipped shape
-    graft.operators.Dedup.containmentPlan(spark, dir).verified.count()
-    (1 to runs).foreach { r =>
-      variants.foreach { name =>
-        val plan = graft.operators.Dedup.containmentPlan(
-          spark, dir, grouping = name)
-        val t0 = System.nanoTime()
-        val n = plan.verified.count()
-        println(s"""{"variant":"$name","run":$r,"sec":${
-          (System.nanoTime() - t0) / 1e9},"rows":$n}""")
-        if (name == "persist") spark.catalog.clearCache()
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Dev tool (r17, r16 verdict item 5): stage itemization of
-  * `q_stream_session_paths` — five legs over the same events stream
-  * ([[graft.operators.StreamQueries.sessionPathsItemize]]) whose
-  * marginal deltas split the row's wall into source+harness floor /
-  * session-store merge machinery / in-state event accumulation /
-  * ordered path build, plus the `slim` dictionary-coded candidate the
-  * verdict asked to check. Legs interleave per run so box drift
-  * brackets every arm; each line carries the state operator's
-  * memoryUsedBytes and commit/update times from the final
-  * StreamingQueryProgress.
-  *
-  * Usage: runMain graft.SessionPathsProbe <sfDir> [runs]
-  */
-object SessionPathsProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val runs = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-session-paths-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val legs = Seq("floor_tumble", "session_count", "session_nosort",
-      "shipped", "slim")
-    def metric(json: String, key: String): String =
-      s""""$key"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1)).getOrElse("null")
-    // warm-up: events-stream first-touch lands on the FIRST streaming
-    // query in a JVM (r12 attribution) — keep it off leg 1
-    graft.operators.StreamQueries.sessionPathsItemize(spark, dir,
-      "floor_tumble").count()
-    (1 to runs).foreach { r =>
-      legs.foreach { leg =>
-        val t0 = System.nanoTime()
-        val n = graft.operators.StreamQueries
-          .sessionPathsItemize(spark, dir, leg).count()
-        val p = graft.operators.StreamQueries.lastProgress.getOrElse("")
-        println(s"""{"leg":"$leg","run":$r,"sec":${
-          (System.nanoTime() - t0) / 1e9},"rows":$n,"state_bytes":${
-          metric(p, "memoryUsedBytes")},"commit_ms":${
-          metric(p, "commitTimeMs")},"update_ms":${
-          metric(p, "allUpdatesTimeMs")}}""")
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Dev tool (r18, r17 verdict item 4): stage itemization of
-  * `q_stream_delta_lsh` — four legs over the same arriving docs
-  * ([[graft.operators.StreamQueries.deltaLshItemize]]) whose marginal
-  * deltas split the wall into source+harness floor / map-side
-  * shingle→minhash→band sketch / stream-static index join / stateful
-  * verify fold. Legs interleave per run so box drift brackets every
-  * arm; each line carries the state operator's memoryUsedBytes and
-  * commit/update times from the final StreamingQueryProgress.
-  *
-  * Usage: runMain graft.DeltaLshProbe <sfDir> [runs]
-  */
-object DeltaLshProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val runs = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-delta-lsh-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val legs = Seq("floor_source", "sketch", "probe_join", "shipped")
-    def metric(json: String, key: String): String =
-      s""""$key"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1)).getOrElse("null")
-    // warm-up: docs-stream first-touch + index staging land on the
-    // first query in a JVM — keep them off leg 1
-    graft.operators.StreamQueries.deltaLshItemize(spark, dir,
-      "probe_join").count()
-    (1 to runs).foreach { r =>
-      legs.foreach { leg =>
-        val t0 = System.nanoTime()
-        val n = graft.operators.StreamQueries
-          .deltaLshItemize(spark, dir, leg).count()
-        val p = graft.operators.StreamQueries.lastProgress.getOrElse("")
-        println(s"""{"leg":"$leg","run":$r,"sec":${
-          (System.nanoTime() - t0) / 1e9},"rows":$n,"state_bytes":${
-          metric(p, "memoryUsedBytes")},"commit_ms":${
-          metric(p, "commitTimeMs")},"update_ms":${
-          metric(p, "allUpdatesTimeMs")}}""")
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Dev tool (r18, r17 verdict item 5): full-row A/B of the three
-  * `text_tfidf` df-attach shapes
-  * ([[graft.operators.TextAnalysis.tfidfShape]]) — join (shipped r16),
-  * window (join-free df over the word exchange, the containment
-  * device), bcast (broadcast df, zero word-shuffles of tf). Interleaved
-  * arms, warm-up excluded, per-run row counts printed so arm
-  * equivalence is verified in the raw output.
-  *
-  * Usage: runMain graft.TfidfShapeProbe <sfDir> [runs]
-  */
-object TfidfShapeProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val runs = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-tfidf-shape-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val shapes = Seq("join", "window", "bcast")
-    // warm-up: JIT + parquet footer cache, shipped shape
-    graft.operators.TextAnalysis.tfidf(spark, dir).count()
-    (1 to runs).foreach { r =>
-      shapes.foreach { name =>
-        val t0 = System.nanoTime()
-        val n = graft.operators.TextAnalysis
-          .tfidfShape(spark, dir, name).count()
-        println(s"""{"shape":"$name","run":$r,"sec":${
-          (System.nanoTime() - t0) / 1e9},"rows":$n}""")
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** The r15 bounded posting collector, RETIRED r16 ([[PostingAggProbe]]'s
-  * measurement): it enforced the df cap inside the aggregation buffer
-  * (over-marker past cap), but every object-collector aggregation falls
-  * back to sort-based past 128 hash-map keys, and the shipped two-pass
-  * plan gets the same bound by construction at the machinery floor.
-  * Lives here only so the probe's comparison stays reproducible.
-  */
-private final case class PostingBuf(
-    over: Boolean, entries: Vector[(Long, Long)])
-
-private final class CappedPostings(cap: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[
-      (Long, Long), PostingBuf, PostingBuf] {
-  def zero: PostingBuf = PostingBuf(over = false, Vector.empty)
-  def reduce(b: PostingBuf, a: (Long, Long)): PostingBuf =
-    if (b.over) b
-    else if (b.entries.length >= cap) PostingBuf(over = true, Vector.empty)
-    else PostingBuf(over = false, b.entries :+ ((a._1, a._2)))
-  def merge(x: PostingBuf, y: PostingBuf): PostingBuf =
-    if (x.over || y.over || x.entries.length + y.entries.length > cap)
-      PostingBuf(over = true, Vector.empty)
-    else PostingBuf(over = false, x.entries ++ y.entries)
-  def finish(b: PostingBuf): PostingBuf = b
-  def bufferEncoder: org.apache.spark.sql.Encoder[PostingBuf] =
-    org.apache.spark.sql.Encoders.product[PostingBuf]
-  def outputEncoder: org.apache.spark.sql.Encoder[PostingBuf] =
-    org.apache.spark.sql.Encoders.product[PostingBuf]
 }

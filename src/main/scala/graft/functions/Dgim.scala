@@ -206,16 +206,6 @@ class DgimBitAggregator(windowSeconds: Long, roundUp: Boolean = true)
   override def outputEncoder: Encoder[Long] = Encoders.scalaLong
 }
 
-class DgimAggregator(windowSeconds: Long) extends Aggregator[Long, Dgim.State, Long] {
-  override def zero: Dgim.State = Dgim.emptyState(windowSeconds)
-  override def reduce(b: Dgim.State, tsSeconds: Long): Dgim.State =
-    Dgim.added(b, tsSeconds)
-  override def merge(a: Dgim.State, b: Dgim.State): Dgim.State = Dgim.merge(a, b)
-  override def finish(r: Dgim.State): Long = r.estimate
-  override def bufferEncoder: Encoder[Dgim.State] = Encoders.product[Dgim.State]
-  override def outputEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
 /** Mergeable state of the DGIM SUM sketch: one independent [[Dgim.State]]
   * per bit position, newest-first inside each.
   */

@@ -76,27 +76,19 @@ object Clusters {
       checkpointEvery: Int = 3): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    def timed[T](what: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] $what: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     // materialize the (possibly expensive) pair computation BEFORE the
     // symmetrizing union, via cache()+count rather than localCheckpoint:
     // checkpointing goes through .rdd, which re-plans the pair query
     // without AQE; caching materializes the AQE-optimized plan once and
     // the union's two branches + every round read the in-memory relation
-    val p = timed("pairs cache") {
-      val d = pairs.toDF("a", "b").cache(); d.count(); d
-    }
-    val edges = timed("edges ckpt")(p.select($"a".as("src"), $"b".as("dst"))
+    val p = pairs.toDF("a", "b").cache()
+    p.count()
+    val edges = p.select($"a".as("src"), $"b".as("dst"))
       .union(p.select($"b".as("src"), $"a".as("dst")))
-      .localCheckpoint())
-    var labels = timed("labels ckpt")(edges.select($"src".as("node")).distinct()
+      .localCheckpoint()
+    var labels = edges.select($"src".as("node")).distinct()
       .select($"node", $"node".as("label"))
-      .localCheckpoint())
+      .localCheckpoint()
     // labels only ever DECREASE, so the label sum is a strictly
     // decreasing potential: fixpoint ⇔ the sum is unchanged. That makes
     // convergence detection a near-free global agg on the round's own
@@ -126,14 +118,11 @@ object Clusters {
       val next = if (round % checkpointEvery == checkpointEvery - 1)
         joined.localCheckpoint(eager = false) // materialized by the sum action below
       else joined
-      val t0 = System.nanoTime()
       val s = labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       labels = next
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $round: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     require(converged, s"label propagation did not converge in $maxRounds rounds")
     p.unpersist(blocking = false) // rounds are checkpointed; the cache is done

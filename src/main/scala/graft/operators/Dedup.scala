@@ -474,24 +474,6 @@ object Dedup {
     */
   def containment(spark: SparkSession, dir: String,
       checkpoint: Boolean = true, dfCap: Option[Long] = None): DataFrame = {
-    val verified = containmentPlan(spark, dir, dfCap).verified
-    // checkpoint=true materializes the small verified pair set so
-    // downstream consumers reuse it without recompute; checkpoint=false
-    // keeps the plan inspectable for PlanShapeSpec
-    if (checkpoint) verified.localCheckpoint() else verified
-  }
-
-  /** [[containment]]'s intermediates, named — so the stage probe
-    * ([[graft.ContainmentProbe]], r15 verdict item 5) times the SAME
-    * sub-plans the operator runs instead of a hand-copied twin that
-    * could drift.
-    */
-  private[graft] final case class ContainmentPlan(
-      base: DataFrame, grouped: DataFrame, pairStream: DataFrame,
-      co: DataFrame, verified: DataFrame)
-
-  private[graft] def containmentPlan(spark: SparkSession, dir: String,
-      dfCap: Option[Long] = None, grouping: String = "window"): ContainmentPlan = {
     import spark.implicits._
     val t = 0.9
     val cap = dfCap.getOrElse(
@@ -499,66 +481,45 @@ object Dedup {
     // each doc's distinct-shingle count rides along FREE from the
     // pre-explode array — no size aggregation, no size join anywhere.
     // text coalesced: shinglesFastUdf NPEs on a NULL (the Audit NULL-
-    // text corpus case, r15 review); '' shingles to an empty array, so
-    // the doc is absent — exactly the oracle's behavior on NULL
+    // text corpus case); '' shingles to an empty array, so the doc is
+    // absent — exactly the oracle's behavior on NULL
     val base = Tables.documents(spark, dir)
       .select($"doc_id", Text.shinglesFastUdf(coalesce($"text", lit(""))).as("ss"))
       .select($"doc_id", size($"ss").cast("long").as("n"),
         explode($"ss").as("s"))
-    // The posting lists build in ONE base pass (r17 grouping-shape A/B,
-    // decades_r17 Section A; history: the r15 stage probe attributed
-    // this row's 100× wall to the POSTING AGGREGATION, not the pair
-    // stream; the r16 variant probe replaced the typed-Aggregator
-    // collector with a df-count pass + LEFT ANTI of hot shingles +
-    // native collect_list at the groupBy-count machinery floor — but
-    // that shape derived `base` TWICE, once per consumer, ~20 s/pass
-    // at 100×). The shipped r17 shape computes df as
-    // count(*) OVER (PARTITION BY s): the window rides the SAME
-    // exchange+sort the collector needs anyway, the df<=cap filter
-    // runs BEFORE any list materializes, and the collect_list groups
-    // on the window's own partitioning — one base derivation, one
-    // exchange, zero joins. Full-row interleaved A/B at 100×
-    // (ContainmentShapeProbe, 3 runs each): window 50.4-52.3 s vs
-    // two-pass anti 64.2-66.9 vs persisted-base anti 76.4-78.7 (the
-    // persist arm re-confirms the r16 simhash lesson: materializing
-    // the expensive relation costs more than one recompute).
-    // Bounds unchanged: no group above cap ever reaches the collector,
-    // so every aggregation buffer is ≤ cap entries (≤ 64Ki ≈ 1 MB) BY
+    // The posting lists build in ONE base pass: df is
+    // count(*) OVER (PARTITION BY s), which rides the SAME exchange+sort
+    // the collector needs anyway; the df<=cap filter runs BEFORE any
+    // list materializes, and collect_list groups on the window's own
+    // partitioning — one base derivation, one exchange, zero joins.
+    // Why this shape: the posting aggregation, not the pair stream, is
+    // the row's cost, and an object collector on unsorted input falls
+    // back to sort-based aggregation (a typed capped Aggregator ran
+    // 74.7-80.1 s at 100x against a 47.6-49.6 s groupBy-count floor,
+    // decades_r16 Section E). The full-row 100x A/B then put this window
+    // shape at 50.4-52.3 s against 64.2-66.9 s for a count pass + LEFT
+    // ANTI of hot shingles (which derives `base` twice) and 76.4-78.7 s
+    // for that shape over a persisted base (decades_r17 Section A,
+    // bench_raw/containment_shape_probe_r17.jsonl).
+    // Bounds: no group above cap ever reaches the collector, so every
+    // aggregation buffer is ≤ cap entries (≤ 64Ki ≈ 1 MB) BY
     // CONSTRUCTION; a corpus-hot shingle's rows buffer in WindowExec's
     // SPILLING row array (ExternalAppendOnlyUnsafeRowArray — disk past
     // the in-memory threshold, never OOM) before the cap filter drops
-    // them — the same rows the anti shape shuffled and SMJ-streamed,
-    // now counted where they already sit. A lazy generator then
-    // streams each list's ≤ df²/2 unordered pairs; ONE pair-agg counts
-    // them carrying both docs' sizes in the grouping key (n is
-    // functionally dependent on the id); both directions then EXPLODE
-    // from each aggregated row — no payload ever attaches to a
-    // candidate.
-    // grouping arms (kept so ContainmentShapeProbe's A/B stays
-    // reproducible): "window" is shipped (decades_r17 Section A);
-    // "anti" is the retired r16 two-pass shape; "persist" is the anti
-    // shape over a persisted base (probe-only — the unpersist
-    // lifecycle is the caller's).
-    val grouped = grouping match {
-      case "window" =>
-        base
-          .withColumn("df", count(lit(1)).over(Window.partitionBy($"s")))
-          .filter($"df" <= cap)
-          .groupBy($"s")
-          .agg(collect_list(struct($"doc_id".as("id"), $"n")).as("entries"))
-      case "anti" | "persist" =>
-        val b = if (grouping == "persist") base.persist() else base
-        val hot = b.groupBy($"s").agg(count(lit(1)).as("df"))
-          .filter($"df" > cap).select($"s")
-        b.join(hot, Seq("s"), "left_anti")
-          .groupBy($"s")
-          .agg(collect_list(struct($"doc_id".as("id"), $"n")).as("entries"))
-    }
-    val pairStream = grouped
+    // them. A lazy generator then streams each list's ≤ df²/2 unordered
+    // pairs; ONE pair-agg counts them carrying both docs' sizes in the
+    // key (n is functionally dependent on the id); both directions
+    // then EXPLODE from each aggregated row — no payload ever attaches
+    // to a candidate.
+    val postings = base
+      .withColumn("df", count(lit(1)).over(Window.partitionBy($"s")))
+      .filter($"df" <= cap)
+      .groupBy($"s")
+      .agg(collect_list(struct($"doc_id".as("id"), $"n")).as("entries"))
+    val co = postings
       .select(explode($"entries").as("a"), $"entries")
       .select($"a", explode($"entries").as("b"))
       .filter($"a.id" < $"b.id")
-    val co = pairStream
       .groupBy($"a.id".as("ida"), $"a.n".as("na"),
         $"b.id".as("idb"), $"b.n".as("nb"))
       .agg(count(lit(1)).as("inter"))
@@ -571,7 +532,10 @@ object Dedup {
         $"e.n_a".as("n_a"), $"e.inter".as("inter"),
         ($"e.inter" * lit(1.0) / $"e.n_a").as("containment"))
       .filter($"containment" >= t)
-    ContainmentPlan(base, grouped, pairStream, co, verified)
+    // checkpoint=true materializes the small verified pair set so
+    // downstream consumers reuse it without recompute; checkpoint=false
+    // keeps the plan inspectable for PlanShapeSpec
+    if (checkpoint) verified.localCheckpoint() else verified
   }
 
   /** Auto-sized df cap for [[containment]]'s co-occurrence count: a
@@ -1182,10 +1146,10 @@ object Dedup {
   }
 
   /** The 4×16-bit pigeonhole block expression — ONE definition shared
-    * by the shipped collapse, its doc-level spec twin, and
-    * [[graft.SimhashCandProbe]], so the plans whose OUTPUT EQUALITY the
-    * spec proves cannot silently drift apart on the blocking scheme
-    * (r16 review).
+    * by the shipped collapse and its doc-level spec twin, so the plans
+    * whose OUTPUT EQUALITY the spec proves cannot silently drift apart
+    * on the blocking scheme. The doc-level vs signature-level candidate
+    * volumes behind the collapse are in decades_r15 Section B.
     */
   private[graft] def simhashBlockCols(sig: Column): Column = explode(array(
     (0 until 4).map(b => struct(lit(b).as("blk"),

@@ -17,7 +17,7 @@ import graft.sources.Tables
   * operator's declared distribution/ordering requirements) → streaming
   * per-group DGIM fold with O(log² W) state. Unlike groupByKey.mapGroups,
   * no group is ever materialized in task memory, so a hot window cannot
-  * OOM a task at 100 TB. The mergeable `DgimAggregator` remains the
+  * OOM a task at 100 TB. The mergeable `DgimBitAggregator` remains the
   * incremental streaming path (graft.streaming.TrafficJobs).
   */
 object DgimQueries {

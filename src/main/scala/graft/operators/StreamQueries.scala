@@ -148,6 +148,11 @@ object StreamQueries {
     * driver's per-row machinery costs stay comparable; at the 100×
     * fixture the largest source (157 MB events) sizes to 19, under
     * both caps, so no measured number moves.
+    *
+    * The heap cap reads the max heap of THIS JVM, the one that builds
+    * the query. Only in local mode does that JVM also run the tasks; on
+    * a cluster the executors' heap is what the guard should budget, so
+    * there it is sized from the wrong JVM.
     */
   private def runToTableSized(spark0: SparkSession, mode: String,
       inputBytes: Long)(
@@ -687,13 +692,7 @@ object StreamQueries {
     * to rung-surviving arrivals (the `asurv` CTE — the oracle encodes
     * the first-drop contract) — staged online auditing ≡ batch replay.
     */
-  def streamAudit(spark: SparkSession, dir: String,
-      nearRung: Boolean = true): DataFrame =
-    // nearRung=false is a MEASUREMENT-ONLY switch (never a query row):
-    // it skips the lazy sketch + band probe so the decades itemization
-    // can attribute the row's wall between the three stateless gate
-    // probes and the near rung's sketch/probe/fold — the r14 verdict
-    // asked for exactly this probe/sketch/harness split (item 4)
+  def streamAudit(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, mode = "append") { s =>
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -708,13 +707,9 @@ object StreamQueries {
       }
       val fpIdx = Dedup.baseFpIndex(s, dir)
         .select($"text_hash", $"keep_id".as("base_keep"))
-      // the band index loads only when the near rung runs, so the
-      // measurement switch excludes its staging read + shuffle sizing
-      val buckets = if (!nearRung) null else {
-        val bucketsDump = lshBucketsDump(s, dir)
-        sizeProbeShuffle(s, bucketsDump) // the delta-LSH probe convention
-        s.read.parquet(bucketsDump)
-      }
+      val bucketsDump = lshBucketsDump(s, dir)
+      sizeProbeShuffle(s, bucketsDump) // the delta-LSH probe convention
+      val buckets = s.read.parquet(bucketsDump)
       val pred = when(TextAnalysis.qmGuard($"text"),
         TextAnalysis.qmMarginCol($"text", w) >= TextAnalysis.QmScale / 2)
         .otherwise(lit(false))
@@ -756,25 +751,19 @@ object StreamQueries {
         // band probe (the early-exit the production admission path
         // takes; its near receipt is undefined at ingest — the batch
         // auditor owns full lineage). Only survivors sketch.
-        .withColumn("hashes", when(lit(nearRung) && $"q_ok" && !$"contam" &&
+        .withColumn("hashes", when($"q_ok" && !$"contam" &&
           $"base_keep".isNull, graft.functions.ShingleGramHashes($"text")))
         .withColumn("sig", when($"hashes".isNotNull && size($"hashes") > 0,
           graft.functions.MinhashSig($"hashes")))
         .withColumn("bands", when($"sig".isNotNull,
           graft.functions.MinhashBands($"sig")))
-        .transform { pre =>
-          if (!nearRung) pre.select($"doc_id", $"source", $"q_ok",
-            $"contam", $"base_keep", $"scrubbed",
-            lit(null).cast("long").as("cand_near"), $"text_hash")
-          else pre
-            .select($"doc_id", $"source", $"q_ok", $"contam", $"base_keep",
-              $"scrubbed", $"sig", $"text_hash",
-              posexplode_outer($"bands").as(Seq("band_idx", "band_hash")))
-            .join(buckets, Seq("band_idx", "band_hash"), "left") // stream-static
-            .select($"doc_id", $"source", $"q_ok", $"contam", $"base_keep",
-              $"scrubbed", nearUdf($"sig", $"base_members").as("cand_near"),
-              $"text_hash")
-        }
+        .select($"doc_id", $"source", $"q_ok", $"contam", $"base_keep",
+          $"scrubbed", $"sig", $"text_hash",
+          posexplode_outer($"bands").as(Seq("band_idx", "band_hash")))
+        .join(buckets, Seq("band_idx", "band_hash"), "left") // stream-static
+        .select($"doc_id", $"source", $"q_ok", $"contam", $"base_keep",
+          $"scrubbed", nearUdf($"sig", $"base_members").as("cand_near"),
+          $"text_hash")
         .as[(Long, String, Boolean, Boolean, Option[Long], Int,
           Option[Long], String)]
         // key = (doc_id, text_hash): two same-id arrivals with
@@ -1367,6 +1356,19 @@ object StreamQueries {
       .toDF("doc_id_a", "doc_id_b", "est_jaccard")
   }
 
+  /** The GROUPED bucket layout staged once per source generation: the
+    * static side of the stream-static probe is then a plain parquet
+    * read per query, instead of re-running the explode+groupBy at every
+    * build. A compaction ([[Dedup.lshCommit]]) publishes the next
+    * generation the same way; the stream adopts it on restart.
+    */
+  private[graft] def lshBucketsDump(spark: SparkSession, dir: String): String =
+    graft.sources.DumpCache.ensure(
+      graft.sources.DumpCache.dirFor("graft_base_lsh_buckets", dir, "documents.parquet")) { tmp =>
+      groupBandBuckets(Dedup.baseMinhashIndex(spark, dir))
+        .write.mode("overwrite").parquet(tmp)
+    }
+
   /** CONTINUOUS near-dup detection for an ingest stream — the LSH twin
     * of `q_stream_delta_dedup`'s exact gate, and the streaming form of
     * `dedup_delta_lsh`: arriving documents sketch map-side (the native
@@ -1399,20 +1401,12 @@ object StreamQueries {
     * emits. Output (normalized pair + signature-estimated Jaccard ≥
     * 0.7) equals the batch `dedup_delta_lsh` contract, so the SAME
     * DuckDB sketch replay hash-checks the continuous form.
+    *
+    * No stage dominates the wall: at the 100× fixture the source is
+    * ~1 s, the map-side sketch +16 s, the band-index join +10 s and the
+    * verify fold with its state +12-15 s, each at its contract cost
+    * (decades_r18 Section C, bench_raw/r18/delta_lsh_probe_r18.jsonl).
     */
-  /** The GROUPED bucket layout staged once per source generation: the
-    * static side of the stream-static probe is then a plain parquet
-    * read per query, instead of re-running the explode+groupBy at every
-    * build. A compaction ([[Dedup.lshCommit]]) publishes the next
-    * generation the same way; the stream adopts it on restart.
-    */
-  private[graft] def lshBucketsDump(spark: SparkSession, dir: String): String =
-    graft.sources.DumpCache.ensure(
-      graft.sources.DumpCache.dirFor("graft_base_lsh_buckets", dir, "documents.parquet")) { tmp =>
-      groupBandBuckets(Dedup.baseMinhashIndex(spark, dir))
-        .write.mode("overwrite").parquet(tmp)
-    }
-
   def streamDeltaLsh(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, mode = "append") { s =>
       import s.implicits._
@@ -1423,63 +1417,6 @@ object StreamQueries {
         .filter($"doc_id" % 5 === 0)
       deltaLshTopologyOnBuckets(docs, s.read.parquet(bucketsDump))
     }
-
-  /** Stage itemization of [[streamDeltaLsh]] (r17 verdict item 4 — the
-    * top streaming wall at 100×, 68.4 s isolated, never stage-split).
-    * Four legs, each a FULL streaming query over the same arriving
-    * docs, whose marginal deltas attribute the wall
-    * ([[sessionPathsItemize]]'s method):
-    *
-    *   floor_source — arrivals streamed to the memory sink, one
-    *                  stateless projection (source + harness floor)
-    *   sketch       — + shingle→minhash→band explode map-side (the
-    *                  128-perm signature cost; sig length emitted so
-    *                  the signatures actually materialize)
-    *   probe_join   — + the stream-static left join against the staged
-    *                  grouped band index, shuffle sized from the index
-    *                  bytes exactly like shipped ([[sizeProbeShuffle]]);
-    *                  sig carried through the join (the fold needs it in
-    *                  shipped, so the join leg must pay its width),
-    *                  member lists reduced to a size at the sink
-    *   shipped      — [[streamDeltaLsh]] itself (adds the watermark +
-    *                  per-bucket flatMapGroupsWithState verify fold)
-    *
-    * Driven by [[graft.DeltaLshProbe]]; not a queries() row.
-    */
-  private[graft] def deltaLshItemize(spark: SparkSession, dir: String,
-      leg: String): DataFrame = leg match {
-    case "shipped" => streamDeltaLsh(spark, dir)
-    case _ => runToTable(spark, mode = "append") { s =>
-      import s.implicits._
-      import graft.functions.{MinhashBands, MinhashSig, ShingleGramHashes}
-      val docs = s.readStream.schema(docsRawSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .filter($"doc_id" % 5 === 0)
-      def sketched = docs
-        .select($"doc_id", ShingleGramHashes($"text").as("hashes"))
-        .filter(size($"hashes") > 0)
-        .select($"doc_id", MinhashSig($"hashes").as("sig"))
-        .select($"doc_id", $"sig", posexplode(MinhashBands($"sig"))
-          .as(Seq("band_idx", "band_hash")))
-      leg match {
-        case "floor_source" => docs.select($"doc_id")
-        case "sketch" =>
-          sketched.select($"doc_id", $"band_idx", $"band_hash",
-            size($"sig").as("sig_len"))
-        case "probe_join" =>
-          val bucketsDump = lshBucketsDump(s, dir)
-          sizeProbeShuffle(s, bucketsDump)
-          sketched
-            .join(s.read.parquet(bucketsDump),
-              Seq("band_idx", "band_hash"), "left")
-            .select($"doc_id", $"band_idx", size($"sig").as("sig_len"),
-              size(coalesce($"base_members", array()
-                .cast("array<struct<doc_id:bigint,sig:array<bigint>>>")))
-                .as("n_base"))
-        case other => throw new IllegalArgumentException(s"unknown leg $other")
-      }
-    }
-  }
 
   /** Size the harness session's shuffle partitions from a staged probe
     * index's ON-DISK bytes: AQE is disabled for stateful streaming
@@ -2087,17 +2024,16 @@ object StreamQueries {
     * streaming aggregation); per-session paths ARE the streaming
     * contract. Hash-matches the batch gaps-and-islands path oracle.
     *
-    * Stage itemization (decades_r17 Section B, [[graft.SessionPathsProbe]]
-    * at the 100× fixture): the wall is the MACHINERY FLOOR — a plain
+    * Why the shape stays as it is (decades_r17 Section B, measured at
+    * the 100× fixture): the wall is the MACHINERY FLOOR — a plain
     * watermarked tumble count on the same 10M arrivals runs 33-67 s
     * (source + 9.5M-group windowed state + sink collection); the
     * session store adds ~0, in-state event accumulation 0-16 s, the
     * ordered path build ~9 s at emit. A dictionary-coded state row
-    * (`sessionPathsItemize("slim")`) cuts summed state-update time
-    * ~40% but only 2% of state bytes and 5-12% of wall — and needs a
-    * CLOSED event-type vocabulary collected before the stream starts,
-    * which this row's open-world contract refuses. Adjudicated
-    * no-change-needed; the scale path stays the bounded-state twin
+    * cuts summed state-update time ~40% but only 2% of state bytes and
+    * 5-12% of wall — and needs a CLOSED event-type vocabulary collected
+    * before the stream starts, which this row's open-world contract
+    * refuses. The scale path is the bounded-state twin
     * [[streamSessionPathsCapped]].
     */
   def streamSessionPaths(spark: SparkSession, dir: String): DataFrame =
@@ -2134,76 +2070,6 @@ object StreamQueries {
            MAX(ts) + INTERVAL '30 minutes' AS session_end,
            string_agg(event_type, '>' ORDER BY ts, event_id) AS path
     FROM numbered GROUP BY user_id, sid"""
-
-  /** Itemization legs for [[streamSessionPaths]] (r16 verdict item 5 —
-    * the 69.4 s 100× row was never stage-split the way q_stream_audit
-    * was). Each leg is a full streaming query over the SAME source so
-    * marginal deltas attribute the wall:
-    *   floor_tumble    — plain keyed windowed count: source + harness +
-    *                     watermark + state-store machinery floor
-    *   session_count   — session_window count, NO payload: adds the
-    *                     merge-on-overlap session-store machinery
-    *   session_nosort  — session_window + collect_list(struct): adds
-    *                     the in-state event accumulation (emits sizes,
-    *                     skipping the ordered path build)
-    *   shipped         — [[streamSessionPaths]] itself (adds array_sort
-    *                     + transform + array_join at emit)
-    *   slim            — the candidate rewrite the verdict asked to
-    *                     check: state carries (ts, event_id, CODE int)
-    *                     with event_type dictionary-coded against the
-    *                     corpus's distinct types (collected batch-side,
-    *                     tiny) and decoded at emit — identical output,
-    *                     smaller state rows
-    * Driven by [[graft.SessionPathsProbe]]; not a queries() row.
-    */
-  private[graft] def sessionPathsItemize(spark: SparkSession, dir: String,
-      leg: String): DataFrame = leg match {
-    case "shipped" => streamSessionPaths(spark, dir)
-    case "floor_tumble" => runToTable(spark) { s =>
-      import s.implicits._
-      eventsStream(s, dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy($"user_id", window($"ts", "1 hour"))
-        .agg(count(lit(1)).as("n"))
-        .select($"user_id", $"window.start".as("window_start"), $"n")
-    }
-    case "session_count" => runToTable(spark) { s =>
-      import s.implicits._
-      eventsStream(s, dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy($"user_id", session_window($"ts", "30 minutes"))
-        .agg(count(lit(1)).as("n"))
-        .select($"user_id", $"session_window.start".as("session_start"), $"n")
-    }
-    case "session_nosort" => runToTable(spark) { s =>
-      import s.implicits._
-      eventsStream(s, dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy($"user_id", session_window($"ts", "30 minutes"))
-        .agg(collect_list(struct($"ts", $"event_id", $"event_type")).as("l"))
-        .select($"user_id", $"session_window.start".as("session_start"),
-          size($"l").as("n"))
-    }
-    case "slim" =>
-      val types = spark.read.parquet(s"$dir/events.parquet")
-        .select("event_type").distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      runToTable(spark) { s =>
-        import s.implicits._
-        val dict = typedlit(types)
-        eventsStream(s, dir)
-          .withWatermark("ts", "1 hour")
-          .select($"user_id", $"ts", $"event_id",
-            array_position(dict, $"event_type").cast("int").as("code"))
-          .groupBy($"user_id", session_window($"ts", "30 minutes"))
-          .agg(array_sort(
-            collect_list(struct($"ts", $"event_id", $"code"))).as("l"))
-          .select($"user_id", $"session_window.start".as("session_start"),
-            $"session_window.end".as("session_end"),
-            array_join(transform($"l",
-              x => element_at(dict, x.getField("code"))), ">").as("path"))
-      }
-  }
 
   /** One arriving event for the bounded-buffer sessionizer. */
   case class SessEvent(user_id: Long, tsMicros: Long, event_id: Long,

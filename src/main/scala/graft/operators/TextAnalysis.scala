@@ -1054,39 +1054,7 @@ object TextAnalysis {
     * table is words-cardinality (broadcastable) and the window is the
     * same map-side-limited top-k as q_topk_window.
     */
-  def tfidf(spark: SparkSession, dir: String): DataFrame =
-    tfidfShape(spark, dir, TfidfDefaultShape)
-
-  /** Default df-attach shape for [[tfidf]]; see [[tfidfShape]]. */
-  private[graft] val TfidfDefaultShape = "join"
-
-  /** [[tfidf]] with the df-attach shape parameterized (r17 verdict
-    * item 5 — the row is the largest batch 100× wall after containment
-    * and its explode→agg→join→window chain was never stage-itemized).
-    * All three shapes return identical rows; [[graft.TfidfShapeProbe]]
-    * A/Bs them full-row:
-    *
-    *   join   — the shipped r16 shape: df = groupBy(word) over the tf
-    *            table, sort-merge joined back on word (Catalyst may
-    *            reuse the word exchange between the df agg and the join
-    *            left side, but the join still shuffles tf on word
-    *            before the rank window re-shuffles it on doc_id)
-    *   window — df = count(*) OVER (PARTITION BY word) riding ONE word
-    *            exchange of the tf table, join-free (the device that
-    *            won dedup_containment ~23% in r17); the rank window
-    *            then re-shuffles on doc_id as before
-    *   bcast  — df agg kept (map-side partials make it cheap: the
-    *            shuffle carries distinct words per partition, not tf
-    *            rows) but BROADCAST back, so tf is never shuffled on
-    *            word at all — one fewer tf-size exchange than either
-    *            shape above. The trade at open-web 100 TB scale: the
-    *            broadcast is vocab-sized; with a multi-GB vocabulary
-    *            (url/typos tail) the window shape is the safe default,
-    *            which is why shipping bcast requires the measured win
-    *            AND the vocab-size caveat in the row's scaladoc.
-    */
-  private[graft] def tfidfShape(spark: SparkSession, dir: String,
-      shape: String): DataFrame = {
+  def tfidf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val w = org.apache.spark.sql.expressions.Window
     val words = Tables.documents(spark, dir)
@@ -1094,20 +1062,16 @@ object TextAnalysis {
       .filter(length($"word") >= 3)
     val tf = words.groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
     // document frequency DERIVES from the tf table (tf rows are already
-    // distinct (doc, word) pairs): one agg over the much smaller tf
-    // relation replaces a second full explode + distinct shuffle of the
-    // corpus — at 100 TB that second tokenization pass is the cost
-    val withDf = shape match {
-      case "join" =>
-        tf.join(tf.groupBy($"word").agg(count(lit(1)).as("df")), "word")
-      case "bcast" =>
-        tf.join(broadcast(tf.groupBy($"word").agg(count(lit(1)).as("df"))),
-          "word")
-      case "window" =>
-        tf.withColumn("df", count(lit(1)).over(w.partitionBy($"word")))
-      case other => throw new IllegalArgumentException(s"unknown shape $other")
-    }
-    withDf
+    // distinct (doc, word) pairs), so df is a plain count per word — no
+    // count-distinct over token rows. The df side still re-runs the
+    // scan + explode: column pruning drops tf's count from its copy of
+    // the tf aggregate, so the two exchanges differ and are not reused.
+    // df attaches by a plain join: in the full-row 100x A/B, this join,
+    // a join-free count-over-word window and a forced broadcast ran
+    // within noise of each other (means 22.4 / 20.8 / 21.5 s,
+    // decades_r18 Section B, bench_raw/r18/tfidf_shape_probe_r18.jsonl)
+    // — the wall is the shared explode → tf agg → rank chain.
+    tf.join(tf.groupBy($"word").agg(count(lit(1)).as("df")), "word")
       .withColumn("rk", row_number().over(
         w.partitionBy($"doc_id")
           .orderBy(($"tf" * lit(1.0) / $"df").desc, $"word".asc)))

@@ -179,29 +179,23 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!physical(temp).exists(_.isInstanceOf[SortMergeJoinExec]))
   }
 
-  test("text_tfidf shapes: identical rows; window arm join-free; bcast arm " +
-      "broadcasts df and never sort-merges") {
-    // r18 (r17 verdict item 5): the three df-attach shapes are one
-    // result set — the probe picks the winner on wall time alone
-    def rows(shape: String) =
-      TextAnalysis.tfidfShape(spark, sf, shape).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getLong(3),
-          r.getLong(4))).sortBy(t => (t._1, t._3)).toSeq
-    val join = rows("join")
-    assert(join.nonEmpty)
-    assert(rows("window") === join, "window shape diverged from join")
-    assert(rows("bcast") === join, "bcast shape diverged from join")
-    val winNodes = physical(TextAnalysis.tfidfShape(spark, sf, "window"))
-    assert(!winNodes.exists(_.isInstanceOf[SortMergeJoinExec]) &&
-      !winNodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
-      "window shape must attach df join-free (count over the word exchange)")
-    assert(winNodes.count(_.isInstanceOf[ShuffleExchangeExec]) <= 3,
-      "window shape: tf agg + word window + doc_id rank = 3 exchanges max")
-    val bcNodes = physical(TextAnalysis.tfidfShape(spark, sf, "bcast"))
-    assert(bcNodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
-      "bcast shape must broadcast df")
-    assert(!bcNodes.exists(_.isInstanceOf[SortMergeJoinExec]),
-      "bcast shape must never shuffle tf on word for the join")
+  test("text_tfidf: df aggregates the (doc_id, word) tf grouping, never raw tokens") {
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    def keys(a: HashAggregateExec) =
+      a.groupingExpressions.map(_.references.head.name).toSet
+    val nodes = physical(TextAnalysis.tfidf(spark, sf))
+    // the df aggregation is the one keyed on the word alone; each sits
+    // over the tf grouping, so df counts (doc_id, word) groups — one per
+    // document containing the word — never repeated token rows
+    val dfAggs = nodes.collect {
+      case a: HashAggregateExec if keys(a) == Set("word") => a
+    }
+    assert(dfAggs.nonEmpty, "no word-keyed df aggregation in the plan")
+    for (a <- dfAggs)
+      assert(a.child.exists {
+        case b: HashAggregateExec => keys(b) == Set("doc_id", "word")
+        case _ => false
+      }, "df must aggregate over the (doc_id, word) tf grouping")
   }
 
   test("text_search: top-k is TakeOrdered, no cartesian anywhere") {
