@@ -70,6 +70,13 @@ object Dgim {
   def emptyState(windowSeconds: Long): State =
     State(windowSeconds, 0L, Array.empty, Array.empty)
 
+  /** The reference's lenient bit test: a message feeds the sketch only
+    * when its value parses as the integer 1 (surrounding blanks allowed);
+    * null and non-numeric values are skipped.
+    */
+  def isOneBit(value: String): Boolean =
+    value != null && value.trim.toIntOption.contains(1)
+
   /** In-place triple-merge over the first `m` slots of newest-first
     * parallel bucket arrays (restart-scan loop shape matching the
     * reference, DGIMAccumulator.java:129-160). Returns the new length.
@@ -196,10 +203,8 @@ case class BitEvent(value: String, tsSec: Long)
 class DgimBitAggregator(windowSeconds: Long, roundUp: Boolean = true)
     extends Aggregator[BitEvent, Dgim.State, Long] {
   override def zero: Dgim.State = Dgim.emptyState(windowSeconds)
-  override def reduce(b: Dgim.State, e: BitEvent): Dgim.State = {
-    val isOne = e.value != null && e.value.trim.toIntOption.contains(1)
-    if (!isOne) b else Dgim.added(b, e.tsSec)
-  }
+  override def reduce(b: Dgim.State, e: BitEvent): Dgim.State =
+    if (Dgim.isOneBit(e.value)) Dgim.added(b, e.tsSec) else b
   override def merge(a: Dgim.State, b: Dgim.State): Dgim.State = Dgim.merge(a, b)
   override def finish(r: Dgim.State): Long = r.estimate(roundUp)
   override def bufferEncoder: Encoder[Dgim.State] = Encoders.product[Dgim.State]

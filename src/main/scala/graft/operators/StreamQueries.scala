@@ -1958,11 +1958,6 @@ object StreamQueries {
     }
   }
 
-  /** The reference's full pipeline shape end-to-end: events → traffic-JSON
-    * messages → lenient TrafficSource decode → streaming tumbling DGIM
-    * (1 h windows to fit the events table's timescale). Rows-only driver
-    * check; StreamingSpec asserts the error bound.
-    */
   /** Reference Job 2's full streaming pipeline: traffic-JSON messages →
     * lenient decode → watermarked HOP (1 h / 15 min) DGIM. Rows-only
     * driver check; StreamingSpec asserts the hop-window error bound.
@@ -1977,6 +1972,11 @@ object StreamQueries {
     }
   }
 
+  /** The reference's full pipeline shape end-to-end: events → traffic-JSON
+    * messages → lenient TrafficSource decode → streaming tumbling DGIM
+    * (1 h windows to fit the events table's timescale). Rows-only Verify
+    * check; StreamingSpec asserts the error bound.
+    */
   def streamDgimTumble(spark: SparkSession, dir: String): DataFrame = {
     val dump = messageDump(spark, dir)
     runToTable(spark) { s =>

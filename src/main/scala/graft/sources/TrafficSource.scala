@@ -14,8 +14,13 @@ import org.apache.spark.sql.types._
   * try_to_timestamp (= TRY_CAST(UNIX_TIMESTAMP(...))); rows with null
   * value or timestamp dropped.
   *
-  * Works identically on batch and streaming DataFrames — pure Column
-  * expressions, fully codegen'd, no shuffle.
+  * Works identically on batch and streaming DataFrames, no shuffle.
+  * The decoded fields leave through a one-row `inline` generator, not a
+  * plain projection: filter pushdown would inline projected expressions
+  * into the null filter, so each message would run `from_json` three
+  * times and the timestamp parse twice. A filter is never pushed through
+  * a `Generate` it depends on, so each message is decoded once and its
+  * timestamp parsed once (PlanShapeSpec pins it).
   */
 object TrafficSource {
 
@@ -31,8 +36,9 @@ object TrafficSource {
   def parse(messages: DataFrame, rawCol: String = "raw"): DataFrame =
     messages
       .select(from_json(col(rawCol), messageSchema).as("m"))
-      .select(col("m.value").as("value"),
-        try_to_timestamp(col("m.timestamp"), lit(IsoMicros)).as("event_ts"))
+      .select(inline(array(struct(
+        col("m.value").as("value"),
+        try_to_timestamp(col("m.timestamp"), lit(IsoMicros)).as("event_ts")))))
       .withColumn("ts_sec", unix_timestamp(col("event_ts")))
       .filter(col("value").isNotNull && col("ts_sec").isNotNull)
 }

@@ -118,7 +118,7 @@ object TrafficJobs {
             val b = new Dgim.Builder(windowSeconds)
             state.getOption.foreach(b.loadFrom)
             rows.foreach { case (_, v, ts) =>
-              if (v != null && v.trim.toIntOption.contains(1)) b.add(ts)
+              if (Dgim.isOneBit(v)) b.add(ts)
             }
             val s = b.state
             state.update(s)

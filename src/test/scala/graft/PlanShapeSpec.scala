@@ -668,4 +668,30 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!physical(df).exists(
       _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]))
   }
+
+  test("traffic parse: one from_json and one timestamp parse per message, " +
+      "on its own and under both DGIM jobs") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, GetTimestamp, JsonToStructs}
+    import spark.implicits._
+    import graft.sources.TrafficSource
+    import graft.streaming.TrafficJobs
+    // a file-backed frame: a local Seq would be folded away by the optimizer
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_msgs").toString
+    Seq("""{"value": "1", "timestamp": "2024-01-01T00:00:01.000000"}""")
+      .toDF("raw").write.mode("overwrite").text(dir)
+    def parsed() = TrafficSource.parse(
+      spark.read.text(dir).withColumnRenamed("value", "raw"))
+    def count(df: DataFrame)(pf: PartialFunction[Expression, Expression]): Int =
+      df.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect(pf))).size
+    for ((name, df) <- Seq(
+        "parse" -> parsed(),
+        "tumbleDgim" -> TrafficJobs.tumbleDgim(parsed()),
+        "hopDgim" -> TrafficJobs.hopDgim(parsed()))) {
+      // with a plain projection, filter pushdown copies the decode into
+      // the null filter: 3 from_json and 2 timestamp parses per message
+      assert(count(df) { case j: JsonToStructs => j } === 1, s"$name: from_json count")
+      assert(count(df) { case g: GetTimestamp => g } === 1, s"$name: timestamp parse count")
+    }
+  }
 }

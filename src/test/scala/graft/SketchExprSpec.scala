@@ -72,6 +72,14 @@ class SketchExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     words.zip(both).foreach { case (w, (nb, ub)) =>
       assert(nb === ub, s"cms buckets diverge on <$w>")
     }
+    // parity ends where the ASCII contract does: the bucket expression
+    // hashes bytes, the UDF hashes chars, so it holds only while
+    // wordsFast emits [a-z0-9] tokens, also from non-ASCII text
+    val canary = Seq("ünïcödé ÀÇCÉNTS straße 東京 ½ naïve café").toDF("text")
+      .select(explode(Text.wordsFast($"text")).as("word"))
+      .as[String].collect().toSeq
+    assert(canary.nonEmpty)
+    canary.foreach(w => assert(w.matches("[a-z0-9]*"), s"non-ASCII token <$w>"))
   }
 
   test("wordWindowHashes: prefix-roll O(n) path equals gram64 of every rebuilt window") {

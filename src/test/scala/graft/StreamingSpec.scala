@@ -52,6 +52,30 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(1704067201L, 1704067202L))
   }
 
+  test("TrafficSource.parse keeps from_json's PERMISSIVE leniency on edge inputs") {
+    import spark.implicits._
+    val ts = "2024-01-01T00:00:01.000000"
+    def decode(raw: String): Option[(String, Long)] =
+      TrafficSource.parse(Seq(raw).toDF("raw")).as[(String, java.sql.Timestamp, Long)]
+        .collect().headOption.map { case (v, _, sec) => (v, sec) }
+    // non-string values keep their JSON text
+    assert(decode(s"""{"value": 1, "timestamp": "$ts"}""") === Some(("1", 1704067201L)))
+    assert(decode(s"""{"value": {"a":1}, "timestamp": "$ts"}""") ===
+      Some(("""{"a":1}""", 1704067201L)))
+    // a bare NaN token comes back as the quoted JSON string text
+    assert(decode(s"""{"value": NaN, "timestamp": "$ts"}""") ===
+      Some(("\"NaN\"", 1704067201L)))
+    // the last occurrence of a duplicate key wins
+    assert(decode(s"""{"value": "1", "timestamp": "$ts", "value": null}""") === None)
+    assert(decode(s"""[{"value": "1", "timestamp": "$ts"}]""") === None)
+    assert(decode(s"""{"value": "1", "timestamp": "$ts"} trailing""") ===
+      Some(("1", 1704067201L)))
+    assert(decode(s"""{'value': '1', 'timestamp': '$ts'}""") === Some(("1", 1704067201L)))
+    assert(decode("""{"value": "1", "timestamp": "2024-01-01T00:00:01.123"}""") ===
+      Some(("1", 1704067201L)))
+    assert(decode("""{"value": "1", "timestamp": "2024-01-01T00:00:01"}""") === None)
+  }
+
   test("streaming tumbleDgim over a file-backed traffic stream matches exact count within DGIM bound") {
     // 600 messages over 120 s → two 60 s windows; bit=1 for every 3rd msg
     val base = 1704067200L // 2024-01-01T00:00:00 UTC
