@@ -255,8 +255,8 @@ class DgimSumAggregator(windowSeconds: Long, bits: Int = 17)
     else {
       val v = math.min(e.amount, (1L << bits) - 1)
       // hot path: one 17-slot ref-array copy per row, mutated in place —
-      // Vector.updated per set bit was up to 17 persistent-vector copies
-      // per row (the round-2 count-sketch lesson applied to the sum form)
+      // Vector.updated per set bit would be up to 17 persistent-vector
+      // copies per row
       val out = b.states.toArray
       var j = 0
       while (j < bits) {

@@ -1,24 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.plans.{DgimStrategy, DgimSumWindowAggPlan, DgimWindowAggPlan}
+import graft.plans.{DgimStrategy, DgimWindowAggPlan}
 import graft.sources.Tables
 
 /** DGIM approximate 1-bit counting per event-time window — the reference's
   * flagship capability (tumble + hop DGIM estimates), deterministic batch
-  * form.
+  * form, and its §5 sum companion.
   *
   * Executed by the custom [[graft.plans.DgimWindowAggExec]] physical
-  * operator: filter → window-assign → ONE shuffle on the window key +
-  * SPILLABLE external sort (both planned by EnsureRequirements from the
-  * operator's declared distribution/ordering requirements) → streaming
-  * per-group DGIM fold with O(log² W) state. Unlike groupByKey.mapGroups,
-  * no group is ever materialized in task memory, so a hot window cannot
-  * OOM a task at 100 TB. The mergeable `DgimBitAggregator` remains the
-  * incremental streaming path (graft.streaming.TrafficJobs).
+  * operator (count and sum alike): filter → window-assign → ONE shuffle on
+  * the window key + SPILLABLE external sort (both planned by
+  * EnsureRequirements from the operator's declared distribution/ordering
+  * requirements) → streaming per-group DGIM fold with O(log² W) state per
+  * bit. Unlike groupByKey.mapGroups, no group is ever materialized in task
+  * memory, so a hot window cannot OOM a task at 100 TB. The mergeable
+  * `DgimBitAggregator` remains the incremental streaming path
+  * (graft.streaming.TrafficJobs).
   */
 object DgimQueries {
 
@@ -29,35 +31,42 @@ object DgimQueries {
     */
   val SumBits = 17
 
-  private def dgimOverWindows(spark: SparkSession, dir: String,
-      duration: String, slide: Option[String]): DataFrame = {
+  /** Window span of every batch DGIM query, and the sketch's W. */
+  private val WindowSeconds = 3600L
+
+  /** The exec's child: clicks with a non-null ts as (ws, we, ts_sec),
+    * plus the cents amount for the sum form; registers the strategy.
+    *
+    * ts null guard: the exec's child contract is non-null LONG columns —
+    * a null ts would make window() emit a null struct whose getLong reads
+    * 0 and lands the row in the 1970 epoch window instead of failing.
+    */
+  private def dgimChild(spark: SparkSession, dir: String, win: Column,
+      cents: Option[Column]): LogicalPlan = {
     import spark.implicits._
-    val win = slide match {
-      case Some(s) => window($"ts", duration, s)
-      case None    => window($"ts", duration)
-    }
-    val windowSeconds = 3600L // both variants use a 1 h window size
-    // ts null guard: the exec's child contract is 3 non-null LONG columns —
-    // a null ts would make window() emit a null struct whose getLong reads
-    // 0 and lands the row in the 1970 epoch window instead of failing
     val child = Tables.events(spark, dir)
       .filter($"event_type" === "click" && $"ts".isNotNull)
-      .select(win.as("w"), unix_timestamp($"ts").as("ts_sec"))
-      .select($"w.start".cast("long").as("ws"), $"w.end".cast("long").as("we"), $"ts_sec")
+      .select(Seq(win.as("w"), unix_timestamp($"ts").as("ts_sec")) ++
+        cents.map(_.as("cents")): _*)
+      .select(Seq($"w.start".cast("long").as("ws"), $"w.end".cast("long").as("we"),
+        $"ts_sec") ++ cents.map(_ => $"cents"): _*)
     DgimStrategy.ensureRegistered(spark)
-    ColumnBridge.ofRows(spark,
-      DgimWindowAggPlan(windowSeconds, ColumnBridge.logicalPlan(child)))
+    ColumnBridge.logicalPlan(child)
   }
 
+  private def tumbleWindow: Column = window(col("ts"), "1 hour")
+  private def hopWindow: Column = window(col("ts"), "1 hour", "15 minutes")
+  private def clickCents: Column = coalesce(round(col("value") * 100).cast("long"), lit(0L))
+
   /** Tumbling 1 h DGIM estimate (reference Job 1; StreamingJob.java:85-99). */
-  def dgimTumble(spark: SparkSession, dir: String): DataFrame =
-    dgimOverWindows(spark, dir, "1 hour", None)
+  def dgimTumble(spark: SparkSession, dir: String): DataFrame = ColumnBridge.ofRows(spark,
+    DgimWindowAggPlan(WindowSeconds, dgimChild(spark, dir, tumbleWindow, None)))
 
   /** Hop 1 h / 15 min DGIM estimate (reference Job 2;
     * SlidingWindowStreamingJob.java:96-118).
     */
-  def dgimSlide(spark: SparkSession, dir: String): DataFrame =
-    dgimOverWindows(spark, dir, "1 hour", Some("15 minutes"))
+  def dgimSlide(spark: SparkSession, dir: String): DataFrame = ColumnBridge.ofRows(spark,
+    DgimWindowAggPlan(WindowSeconds, dgimChild(spark, dir, hopWindow, None)))
 
   /** DuckDB oracle for the deterministic sort-then-fold DGIM queries: a
     * recursive CTE REPLAYS the exact fold the custom exec runs (the
@@ -175,41 +184,26 @@ object DgimQueries {
     * reference answers "approximate request count in the last W".
     *
     * Batch execution routes through the DETERMINISTIC sort-then-fold
-    * [[graft.plans.DgimSumWindowAggExec]] (same shuffle + spillable-sort
-    * shape as the count exec), so the full run replays in DuckDB as 17
-    * per-bit recursive-CTE folds — an exact hash oracle
+    * [[graft.plans.DgimWindowAggExec]] in its `bits = 17` form (the same
+    * operator as the count queries), so the full run replays in DuckDB as
+    * 17 per-bit recursive-CTE folds — an exact hash oracle
     * ([[dgimSumTumbleSql]]). The mergeable
     * [[graft.functions.DgimSumAggregator]] remains the incremental
     * streaming form (`q_stream_dgim_sum`) — its cross-partition bucket
     * merge is legally non-associative with the fold, so only the
     * sort-then-fold path admits estimate-equality oracles.
     */
-  def dgimSumTumble(spark: SparkSession, dir: String): DataFrame =
-    dgimSumOver(spark, dir, window(org.apache.spark.sql.functions.col("ts"), "1 hour"))
+  def dgimSumTumble(spark: SparkSession, dir: String): DataFrame = ColumnBridge.ofRows(spark,
+    DgimWindowAggPlan.sum(WindowSeconds, SumBits,
+      dgimChild(spark, dir, tumbleWindow, Some(clickCents))))
 
   /** Hop-window (1 h / 15 min) twin of [[dgimSumTumble]] — the sum
     * sketch in the reference Job 2's sliding shape; ×4 hop fan-out
     * before the same deterministic per-window fold.
     */
-  def dgimSumSlide(spark: SparkSession, dir: String): DataFrame =
-    dgimSumOver(spark, dir,
-      window(org.apache.spark.sql.functions.col("ts"), "1 hour", "15 minutes"))
-
-  private def dgimSumOver(spark: SparkSession, dir: String,
-      win: org.apache.spark.sql.Column): DataFrame = {
-    import spark.implicits._
-    val windowSeconds = 3600L
-    val child = Tables.events(spark, dir)
-      .filter($"event_type" === "click" && $"ts".isNotNull)
-      .select(win.as("w"),
-        coalesce(round($"value" * 100).cast("long"), lit(0L)).as("cents"),
-        unix_timestamp($"ts").as("ts_sec"))
-      .select($"w.start".cast("long").as("ws"), $"w.end".cast("long").as("we"),
-        $"ts_sec", $"cents")
-    DgimStrategy.ensureRegistered(spark)
-    ColumnBridge.ofRows(spark,
-      DgimSumWindowAggPlan(windowSeconds, SumBits, ColumnBridge.logicalPlan(child)))
-  }
+  def dgimSumSlide(spark: SparkSession, dir: String): DataFrame = ColumnBridge.ofRows(spark,
+    DgimWindowAggPlan.sum(WindowSeconds, SumBits,
+      dgimChild(spark, dir, hopWindow, Some(clickCents))))
 
   /** DuckDB replay of the deterministic SUM fold: the count fold's
     * recursive CTE ([[dgimFoldSql]]'s device) generalized to a

@@ -29,15 +29,22 @@ import graft.functions.Dgim
   *  - `requiredChildOrdering`     = (window_start, window_end, ts) asc
   *
   * and EnsureRequirements plans the shuffle + a SPILLABLE external sort.
-  * The fold itself then streams over sorted rows with O(log² W) DGIM
-  * bucket state — group size no longer bounds memory. At 100 TB this is
-  * the difference between "one hot window OOMs a task" and "never".
+  * The fold itself then streams over sorted rows with `bits` × O(log² W)
+  * DGIM bucket state — group size no longer bounds memory. At 100 TB this
+  * is the difference between "one hot window OOMs a task" and "never".
   *
-  * Output: (window_start TS, window_end TS, count_estimate L, exact_count L).
-  * Child contract: exactly 3 non-null LONG columns (ws_sec, we_sec, ts_sec).
+  * One fold serves both sketches. The sum sketch (Datar et al. 2002 §5
+  * binary decomposition) feeds each amount's set bits into `bits`
+  * independent DGIM builders and emits the 2^j-weighted instance total
+  * next to the exact amount sum; the counting sketch is its one-bit case
+  * with every amount equal to 1.
+  *
+  * Child contract: non-null LONG columns (ws_sec, we_sec, ts_sec) for the
+  * count form, (ws_sec, we_sec, ts_sec, amount) for the sum form.
+  * Output: (window_start TS, window_end TS, <estimate> L, <exact> L).
   */
-case class DgimWindowAggPlan(windowSeconds: Long, output: Seq[Attribute],
-    child: LogicalPlan) extends UnaryNode {
+case class DgimWindowAggPlan(windowSeconds: Long, bits: Int,
+    output: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
   // the operator consumes ALL child columns positionally; without this,
   // ColumnPruning sees zero references and replaces the child with an
@@ -48,46 +55,30 @@ case class DgimWindowAggPlan(windowSeconds: Long, output: Seq[Attribute],
 }
 
 object DgimWindowAggPlan {
-  /** Constructs the plan with FRESH output attributes — output must be a
-    * constructor field (not a `val`): plan copies during optimization
-    * would otherwise mint new ExprIds and break resolution upstream.
+  /** Count form over a 3-column (ws, we, ts_sec) child: every row is
+    * one 1-bit. Output (window_start, window_end, count_estimate,
+    * exact_count).
     */
   def apply(windowSeconds: Long, child: LogicalPlan): DgimWindowAggPlan =
-    DgimWindowAggPlan(windowSeconds, Seq(
+    withOutputs(windowSeconds, 1, "count_estimate", "exact_count", child)
+
+  /** Sum form over a 4-column (ws, we, ts_sec, cents) child. Output
+    * (window_start, window_end, sum_estimate, exact_cents).
+    */
+  def sum(windowSeconds: Long, bits: Int, child: LogicalPlan): DgimWindowAggPlan =
+    withOutputs(windowSeconds, bits, "sum_estimate", "exact_cents", child)
+
+  /** Mints FRESH output attributes — output must be a constructor field
+    * (not a `val`): plan copies during optimization would otherwise mint
+    * new ExprIds and break resolution upstream.
+    */
+  private def withOutputs(windowSeconds: Long, bits: Int, estimate: String,
+      exact: String, child: LogicalPlan): DgimWindowAggPlan =
+    DgimWindowAggPlan(windowSeconds, bits, Seq(
       AttributeReference("window_start", TimestampType, nullable = false)(),
       AttributeReference("window_end", TimestampType, nullable = false)(),
-      AttributeReference("count_estimate", LongType, nullable = false)(),
-      AttributeReference("exact_count", LongType, nullable = false)()), child)
-}
-
-/** The SUM sketch's deterministic twin (Datar et al. 2002 §5 binary
-  * decomposition): same shuffle + spillable-sort shape as the count
-  * plan, but the per-group fold feeds each amount's set bits into 17
-  * independent DGIM builders and emits the 2^j-weighted instance total.
-  * This is the sort-then-fold device that admits an exact SQL replay
-  * (the mergeable [[graft.functions.DgimSumAggregator]] stays the
-  * incremental streaming path — its cross-partition bucket merge is
-  * provably not associative with the fold).
-  *
-  * Child contract: exactly 4 non-null LONG columns
-  * (ws_sec, we_sec, ts_sec, cents).
-  * Output: (window_start TS, window_end TS, sum_estimate L, exact_cents L).
-  */
-case class DgimSumWindowAggPlan(windowSeconds: Long, bits: Int,
-    output: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
-  override def producedAttributes: AttributeSet = AttributeSet(output)
-  override def references: AttributeSet = child.outputSet
-  override protected def withNewChildInternal(newChild: LogicalPlan): LogicalPlan =
-    copy(child = newChild)
-}
-
-object DgimSumWindowAggPlan {
-  def apply(windowSeconds: Long, bits: Int, child: LogicalPlan): DgimSumWindowAggPlan =
-    DgimSumWindowAggPlan(windowSeconds, bits, Seq(
-      AttributeReference("window_start", TimestampType, nullable = false)(),
-      AttributeReference("window_end", TimestampType, nullable = false)(),
-      AttributeReference("sum_estimate", LongType, nullable = false)(),
-      AttributeReference("exact_cents", LongType, nullable = false)()), child)
+      AttributeReference(estimate, LongType, nullable = false)(),
+      AttributeReference(exact, LongType, nullable = false)()), child)
 }
 
 object DgimStrategy extends SparkStrategy {
@@ -96,10 +87,7 @@ object DgimStrategy extends SparkStrategy {
       // capture the child's attributes HERE: the physical child is a
       // PlanLater placeholder with empty output until planning finishes,
       // so required* must not read child.output lazily
-      DgimWindowAggExec(p.windowSeconds, p.output, p.child.output,
-        planLater(p.child)) :: Nil
-    case p: DgimSumWindowAggPlan =>
-      DgimSumWindowAggExec(p.windowSeconds, p.bits, p.output, p.child.output,
+      DgimWindowAggExec(p.windowSeconds, p.bits, p.output, p.child.output,
         planLater(p.child)) :: Nil
     case _ => Nil
   }
@@ -114,29 +102,20 @@ object DgimStrategy extends SparkStrategy {
     }
 }
 
-/** Shared skeleton of the window-group fold execs: the planner
-  * contract (clustered by (ws, we), sorted by (ws, we, ts) — so
-  * EnsureRequirements plans the shuffle + SPILLABLE external sort) and
-  * the streaming group-boundary iterator. Subclasses supply only the
-  * per-group fold: reset state, accumulate one row, write the value
-  * columns. Child contract: `childArity` non-null LONG columns led by
-  * (ws_sec, we_sec, ts_sec); output: (window_start TS, window_end TS,
-  * <value columns>).
+/** Physical operator for [[DgimWindowAggPlan]]: a streaming per-group
+  * fold over `bits` DGIM builders. A 3-column child has no amount column
+  * and every row counts as amount 1 — adding a constant column instead
+  * would widen every shuffled and sorted row. Amounts ≤ 0 skip the
+  * sketch (lenient, like the streaming aggregator); oversized amounts
+  * saturate at 2^bits − 1; the exact column sums every row's amount.
+  * Every instance is evaluated at the group's latest timestamp.
   */
-abstract class WindowGroupFoldExec extends UnaryExecNode {
-  def childAttrs: Seq[Attribute]
+case class DgimWindowAggExec(windowSeconds: Long, bits: Int,
+    output: Seq[Attribute], childAttrs: Seq[Attribute], child: SparkPlan)
+    extends UnaryExecNode {
 
-  /** Number of child columns the null-contract check covers. */
-  protected def childArity: Int
-
-  /** Reset per-group fold state (a fresh group begins). */
-  protected def resetGroup(): Unit
-
-  /** Accumulate one sorted child row into the group state. */
-  protected def accumulate(r: InternalRow): Unit
-
-  /** Write the group's value columns (slots 2..) into `writer`. */
-  protected def writeValues(writer: UnsafeRowWriter): Unit
+  private val arity = childAttrs.length
+  private val maxAmount = (1L << bits) - 1
 
   override def producedAttributes: AttributeSet = AttributeSet(output)
 
@@ -160,20 +139,45 @@ abstract class WindowGroupFoldExec extends UnaryExecNode {
         private var hasGroup = false
         private var curWs = 0L
         private var curWe = 0L
+        private var builders: Array[Dgim.Builder] = _
+        private var exact = 0L
+        private var latest = 0L
         private var pending: InternalRow = _
 
         private def emit(): InternalRow = {
+          var total = 0L
+          var j = 0
+          while (j < bits) {
+            total += (1L << j) * builders(j).state.estimateAt(latest, roundUp = true)
+            j += 1
+          }
           writer.reset()
           writer.write(0, curWs * 1000000L) // epoch seconds -> micros
           writer.write(1, curWe * 1000000L)
-          writeValues(writer)
+          writer.write(2, total)
+          writer.write(3, exact)
           writer.getRow
         }
 
         private def startGroup(ws: Long, we: Long): Unit = {
           curWs = ws; curWe = we
-          resetGroup()
+          builders = Array.fill(bits)(new Dgim.Builder(windowSeconds))
+          exact = 0L
+          latest = 0L
           hasGroup = true
+        }
+
+        private def accumulate(ts: Long, amount: Long): Unit = {
+          exact += amount
+          if (amount > 0L) {
+            val v = math.min(amount, maxAmount)
+            latest = math.max(latest, ts)
+            var j = 0
+            while (j < bits) {
+              if (((v >> j) & 1L) == 1L) builders(j).add(ts)
+              j += 1
+            }
+          }
         }
 
         private def advance(): Unit = {
@@ -183,7 +187,7 @@ abstract class WindowGroupFoldExec extends UnaryExecNode {
             // getLong on a null slot silently reads 0 and would group the
             // row into the 1970 epoch window instead of failing
             var c = 0
-            while (c < childArity) {
+            while (c < arity) {
               require(!r.isNullAt(c),
                 s"$nodeName child emitted a null column at position $c")
               c += 1
@@ -194,7 +198,7 @@ abstract class WindowGroupFoldExec extends UnaryExecNode {
               pending = emit()
               startGroup(ws, we)
             }
-            accumulate(r)
+            accumulate(r.getLong(2), if (arity > 3) r.getLong(3) else 1L)
           }
           if (pending == null && hasGroup && !iter.hasNext) {
             pending = emit()
@@ -209,86 +213,6 @@ abstract class WindowGroupFoldExec extends UnaryExecNode {
         }
       }
     }
-}
-
-case class DgimWindowAggExec(windowSeconds: Long, output: Seq[Attribute],
-    childAttrs: Seq[Attribute], child: SparkPlan) extends WindowGroupFoldExec {
-
-  override protected def childArity: Int = 3
-
-  @transient private var builder: Dgim.Builder = _
-  @transient private var exact = 0L
-
-  override protected def resetGroup(): Unit = {
-    builder = new Dgim.Builder(windowSeconds)
-    exact = 0L
-  }
-
-  override protected def accumulate(r: InternalRow): Unit = {
-    builder.add(r.getLong(2))
-    exact += 1
-  }
-
-  override protected def writeValues(writer: UnsafeRowWriter): Unit = {
-    writer.write(2, builder.state.estimate)
-    writer.write(3, exact)
-  }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
-}
-
-/** Physical operator for [[DgimSumWindowAggPlan]]: identical planner
-  * contract to [[DgimWindowAggExec]] (clustered by window, sorted by
-  * (window, ts) — EnsureRequirements plans the shuffle + spillable
-  * external sort), with a per-group fold over `bits` independent DGIM
-  * builders. Amounts ≤ 0 skip the sketch (lenient, like the streaming
-  * aggregator); oversized amounts saturate at 2^bits − 1; the exact
-  * twin sums every row's cents. Group state is bits × O(log² W) —
-  * group size never bounds task memory.
-  */
-case class DgimSumWindowAggExec(windowSeconds: Long, bits: Int,
-    output: Seq[Attribute], childAttrs: Seq[Attribute], child: SparkPlan)
-    extends WindowGroupFoldExec {
-
-  override protected def childArity: Int = 4
-
-  private val maxAmount = (1L << bits) - 1
-
-  @transient private var builders: Array[Dgim.Builder] = _
-  @transient private var exact = 0L
-  @transient private var latest = 0L
-
-  override protected def resetGroup(): Unit = {
-    builders = Array.fill(bits)(new Dgim.Builder(windowSeconds))
-    exact = 0L
-    latest = 0L
-  }
-
-  override protected def accumulate(r: InternalRow): Unit = {
-    val ts = r.getLong(2); val cents = r.getLong(3)
-    exact += cents
-    if (cents > 0L) {
-      val v = math.min(cents, maxAmount)
-      latest = math.max(latest, ts)
-      var j = 0
-      while (j < bits) {
-        if (((v >> j) & 1L) == 1L) builders(j).add(ts)
-        j += 1
-      }
-    }
-  }
-
-  override protected def writeValues(writer: UnsafeRowWriter): Unit = {
-    var total = 0L
-    var j = 0
-    while (j < bits) {
-      total += (1L << j) * builders(j).state.estimateAt(latest, roundUp = true)
-      j += 1
-    }
-    writer.write(2, total)
-    writer.write(3, exact)
-  }
 
   override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
     copy(child = newChild)

@@ -33,9 +33,9 @@ object KafkaTraffic {
       .load()
       .select(col("value").cast("string").as("raw"))
 
-  /** The upsert sink's record projection, factored PURE (r19 verdict
-    * item 5: the key/value encoding is where an upsert sink silently
-    * corrupts, and it needs no broker to verify): Kafka key = the
+  /** The upsert sink's record projection, factored PURE (the key/value
+    * encoding is where an upsert sink silently corrupts, and it needs
+    * no broker to verify): Kafka key = the
     * binary UTF-8 of window_end rendered as a string (the reference
     * sink's PRIMARY KEY, StreamingJob.java:60-83 — key equality must
     * match window equality, which the timestamp's canonical string

@@ -1,19 +1,25 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Dgim
 import graft.operators.DgimQueries
 
-/** Validates the custom DgimWindowAggExec physical operator end-to-end:
-  * its output must equal the reference semantics computed independently
-  * (collect → group per window → sort → Dgim.estimateSorted), and the
-  * planned physical tree must contain the operator above a planner-inserted
-  * Exchange + Sort.
+/** Validates the custom DgimWindowAggExec physical operator end-to-end,
+  * in its count form (one bit, implicit amount 1) and its sum form
+  * (17 bits over a cents column): its output must equal the reference
+  * semantics computed independently (collect → group per window → sort →
+  * fold), each executed plan must hold exactly one such operator above a
+  * planner-inserted Exchange + Sort, and a null child column must fail
+  * the task.
   */
-class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -26,20 +32,23 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  test("physical plan is DgimWindowAgg over planner-inserted Exchange + Sort") {
-    val plan = DgimQueries.dgimTumble(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("DgimWindowAgg"))
-    assert(plan.contains("Exchange"))
-    assert(plan.contains("Sort"))
-  }
-
-  test("physical plan is DgimSumWindowAgg over planner-inserted Exchange + Sort") {
-    val plan = DgimQueries.dgimSumTumble(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("DgimSumWindowAgg"))
-    assert(plan.contains("Exchange"))
-    assert(plan.contains("Sort"))
+  test("physical plan is one DgimWindowAggExec over planner-inserted Exchange + Sort") {
+    // (query, child width): the count form reads (ws, we, ts_sec) with an
+    // implicit amount of 1 — a constant amount column would widen every
+    // shuffled and sorted row
+    for ((q, width) <- Seq(DgimQueries.dgimTumble _ -> 3, DgimQueries.dgimSlide _ -> 3,
+        DgimQueries.dgimSumTumble _ -> 4, DgimQueries.dgimSumSlide _ -> 4)) {
+      val df = q(spark, sf)
+      df.collect()
+      val execs = collect(df.queryExecution.executedPlan) {
+        case e: graft.plans.DgimWindowAggExec => e
+      }
+      assert(execs.size === 1, df.queryExecution.executedPlan.toString)
+      val exec = execs.head
+      assert(find(exec.child)(_.isInstanceOf[ShuffleExchangeLike]).isDefined)
+      assert(find(exec.child)(_.isInstanceOf[SortExec]).isDefined)
+      assert(exec.child.output.length === width)
+    }
   }
 
   test("sum exec output equals an independent 17-instance sort-then-fold reference") {
@@ -77,7 +86,7 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("custom exec output equals independent sort-then-fold reference (tumble + hop)") {
     import spark.implicits._
-    for (q <- Seq(DgimQueries.dgimTumble _, DgimQueries.dgimSlide _)) {
+    for ((q, isSlide) <- Seq(DgimQueries.dgimTumble _ -> false, DgimQueries.dgimSlide _ -> true)) {
       val got = q(spark, sf)
         .select($"window_start".cast("long"), $"window_end".cast("long"),
           $"count_estimate", $"exact_count")
@@ -89,8 +98,6 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       val clicks = graft.sources.Tables.events(spark, sf)
         .filter($"event_type" === "click")
         .select($"ts".cast("long")).as[Long].collect()
-      val isSlide = got.keys.exists { case (ws, we) => we - ws != 0 } &&
-        got.size > clicks.map(_ / 3600 * 3600).distinct.length
       val expected = clicks
         .flatMap { ts =>
           if (isSlide) (0 until 4).map(i => (ts / 900 * 900 - i * 900L, ts))
@@ -99,8 +106,7 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         .groupBy(_._1)
         .map { case (ws, rows) =>
           val sorted = rows.map(_._2).sorted
-          val we = if (isSlide) ws + 3600 else ws + 3600
-          ((ws, we), (Dgim.estimateSorted(sorted, 3600L), sorted.length.toLong))
+          ((ws, ws + 3600), (Dgim.estimateSorted(sorted, 3600L), sorted.length.toLong))
         }
       assert(got === expected)
     }
@@ -128,21 +134,26 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("exec enforces its non-null child contract instead of silently reading 0") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
+    import org.apache.spark.sql.graft.ColumnBridge
+    import graft.plans.DgimWindowAggPlan
     // a null ts slipped past the query-level guard must FAIL the task,
-    // not land the row in the 1970 epoch window
-    val child = Seq((3600L, 7200L, Some(3700L)), (3600L, 7200L, None))
+    // not land the row in the 1970 epoch window; a null amount must
+    // fail too, not read as 0 cents
+    val countChild = Seq((3600L, 7200L, Some(3700L)), (3600L, 7200L, None))
       .toDF("ws", "we", "ts_sec")
       .select($"ws", $"we", $"ts_sec".cast("long").as("ts_sec"))
+    val sumChild = Seq((3600L, 7200L, 3700L, Some(5L)), (3600L, 7200L, 3701L, None))
+      .toDF("ws", "we", "ts_sec", "cents")
     graft.plans.DgimStrategy.ensureRegistered(spark)
-    val df = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark,
-      graft.plans.DgimWindowAggPlan(3600L,
-        org.apache.spark.sql.graft.ColumnBridge.logicalPlan(child)))
-    val e = intercept[Exception] { df.collect() }
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => Option(x.getMessage).getOrElse("")).toSeq
-    assert(chain(e).exists(_.contains("emitted a null column")), s"got: ${chain(e).take(3)}")
+    for (plan <- Seq(
+        DgimWindowAggPlan(3600L, ColumnBridge.logicalPlan(countChild)),
+        DgimWindowAggPlan.sum(3600L, DgimQueries.SumBits, ColumnBridge.logicalPlan(sumChild)))) {
+      val e = intercept[Exception] { ColumnBridge.ofRows(spark, plan).collect() }
+      assert(chain(e).exists(_.contains("emitted a null column")), s"got: ${chain(e).take(3)}")
+    }
   }
 
   test("operator streams groups (no OOM-prone per-group materialization): many tiny groups") {

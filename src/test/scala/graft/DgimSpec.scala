@@ -110,18 +110,29 @@ class DgimSpec extends AnyFunSuite {
 
   test("added() immutable fast path folds to the identical state as Builder") {
     val rnd = new scala.util.Random(7)
-    for (_ <- 0 until 50) {
-      val n = rnd.nextInt(500)
+    // (W, max stream length): the second input never expires a bit, so
+    // its states grow past the builder's initial capacity
+    for ((w, maxN) <- Seq(600L -> 500, 7200L -> 5000); _ <- 0 until 50) {
+      val n = rnd.nextInt(maxN)
       // UNSORTED: the streaming aggregator consumes arrival order, so the
       // fast path must match the builder on out-of-order streams too
       val ts = Array.fill(n)(rnd.nextLong(7200L))
-      val viaBuilder = {
-        val b = new Dgim.Builder(600); ts.foreach(b.add); b.state
+      def fold(b: Dgim.Builder, part: Array[Long]): Dgim.State = {
+        part.foreach(b.add); b.state
       }
-      val viaAdded = ts.foldLeft(Dgim.emptyState(600))(Dgim.added)
-      assert(viaAdded.ts.toSeq === viaBuilder.ts.toSeq)
-      assert(viaAdded.size.toSeq === viaBuilder.size.toSeq)
-      assert(viaAdded.latest === viaBuilder.latest)
+      val viaBuilder = fold(new Dgim.Builder(w), ts)
+      val viaAdded = ts.foldLeft(Dgim.emptyState(w))(Dgim.added)
+      // resumed from stored state, as each streaming micro-batch does:
+      // loadFrom sizes a large state's arrays to its bucket count, so the
+      // next add takes the growth branch
+      val cut = rnd.nextInt(n + 1)
+      val viaResumed = fold(
+        new Dgim.Builder(w).loadFrom(fold(new Dgim.Builder(w), ts.take(cut))), ts.drop(cut))
+      for (other <- Seq(viaAdded, viaResumed)) {
+        assert(other.ts.toSeq === viaBuilder.ts.toSeq)
+        assert(other.size.toSeq === viaBuilder.size.toSeq)
+        assert(other.latest === viaBuilder.latest)
+      }
       assert(viaAdded.estimate === viaBuilder.estimate)
     }
   }
