@@ -32,12 +32,14 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll
 
   override def afterAll(): Unit = spark.stop()
 
-  test("physical plan is one DgimWindowAggExec over planner-inserted Exchange + Sort") {
-    // (query, child width): the count form reads (ws, we, ts_sec) with an
-    // implicit amount of 1 — a constant amount column would widen every
-    // shuffled and sorted row
-    for ((q, width) <- Seq(DgimQueries.dgimTumble _ -> 3, DgimQueries.dgimSlide _ -> 3,
-        DgimQueries.dgimSumTumble _ -> 4, DgimQueries.dgimSumSlide _ -> 4)) {
+  /** Each query's executed plan holds exactly one DgimWindowAggExec of
+    * `bits` bits over a `width`-column child, with a planner-inserted
+    * Exchange and Sort below it.
+    */
+  private def assertOneExecOverExchangeSort(
+      queries: Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame],
+      bits: Int, width: Int): Unit =
+    for (q <- queries) {
       val df = q(spark, sf)
       df.collect()
       val execs = collect(df.queryExecution.executedPlan) {
@@ -45,10 +47,23 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll
       }
       assert(execs.size === 1, df.queryExecution.executedPlan.toString)
       val exec = execs.head
+      assert(exec.bits === bits)
       assert(find(exec.child)(_.isInstanceOf[ShuffleExchangeLike]).isDefined)
       assert(find(exec.child)(_.isInstanceOf[SortExec]).isDefined)
       assert(exec.child.output.length === width)
     }
+
+  test("physical plan is DgimWindowAgg over planner-inserted Exchange + Sort") {
+    // the count form reads (ws, we, ts_sec) with an implicit amount of 1 —
+    // a constant amount column would widen every shuffled and sorted row
+    assertOneExecOverExchangeSort(
+      Seq(DgimQueries.dgimTumble _, DgimQueries.dgimSlide _), bits = 1, width = 3)
+  }
+
+  test("physical plan is DgimSumWindowAgg over planner-inserted Exchange + Sort") {
+    // the sum form is the same exec at 17 bits over (ws, we, ts_sec, cents)
+    assertOneExecOverExchangeSort(
+      Seq(DgimQueries.dgimSumTumble _, DgimQueries.dgimSumSlide _), bits = 17, width = 4)
   }
 
   test("sum exec output equals an independent 17-instance sort-then-fold reference") {
