@@ -58,16 +58,6 @@ object StreamQueries {
     */
   @volatile var lastProgress: Option[String] = None
 
-  /** A streaming aggregation materializes one state-store instance per
-    * shuffle partition, each with its own checkpoint files per
-    * micro-batch — at the gate's data volume that fixed I/O dominates.
-    * Each harness stream therefore runs on a DEDICATED cloned session
-    * (`spark.newSession()`: own SQLConf, shared SparkContext/catalog)
-    * with a handful of state partitions, so the setting can never leak
-    * to concurrent users of the shared session (results are
-    * partitioning-independent; a real deployment sizes this to the key
-    * cardinality instead).
-    */
   /** Harness state-store override for the [[runToTable]] streams built
     * inside the dynamic scope: None (default) inherits the session's
     * SparkConf provider (heap unless the caller configured otherwise);
@@ -126,14 +116,20 @@ object StreamQueries {
       build: SparkSession => DataFrame): DataFrame =
     runToTableSized(spark0, mode, 0L)(build)
 
-  /** [[runToTable]] with a SIZE-ADAPTIVE state-partition count (r20
-    * optimization round). The harness floor of 8 state partitions is
-    * right at gate SFs (state-store commit I/O per partition per batch
-    * dominates there), but a CPU-heavy stateful aggregation over a
-    * 100×-class ingest runs its post-exchange state machine at
-    * parallelism 8 on a 32-core box — measured isolated on the 100×
-    * hop-count shape: 25.6-27.9 s at 8 partitions vs 17.7 s at 32
-    * (decades_r20 Section F). `inputBytes` > 0 (the source file's
+  /** [[runToTable]] with a SIZE-ADAPTIVE state-partition count. A
+    * streaming aggregation materializes one state-store instance per
+    * shuffle partition, each with its own checkpoint files per
+    * micro-batch — at the gate's data volume that fixed I/O dominates.
+    * Each harness stream therefore runs on a DEDICATED cloned session
+    * (`spark.newSession()`: own SQLConf, shared SparkContext/catalog)
+    * whose state-partition count has a floor of 8, so the setting can
+    * never leak to concurrent users of the shared session (results are
+    * partitioning-independent; a real deployment sizes this to the key
+    * cardinality instead). The floor is right at gate SFs, but a
+    * CPU-heavy stateful aggregation over a 100×-class ingest runs its
+    * post-exchange state machine at parallelism 8 on a 32-core box —
+    * measured isolated on the 100× hop-count shape: 25.6-27.9 s at 8
+    * partitions vs 17.7 s at 32 (decades_r20 Section F). `inputBytes` > 0 (the source file's
     * on-disk size, the same proxy [[sizeProbeShuffle]] uses) raises
     * the count to one partition per 8 MiB of source, capped at the
     * LOWER of 2×cores (keeps per-partition state large enough that
@@ -1965,10 +1961,8 @@ object StreamQueries {
   def streamDgimSlide(spark: SparkSession, dir: String): DataFrame = {
     val dump = messageDump(spark, dir)
     runToTable(spark) { s =>
-      val parsed = TrafficSource.parse(
-        s.readStream.format("text").load(dump).withColumnRenamed("value", "raw"))
-      TrafficJobs.hopDgim(parsed, size = "1 hour", slide = "15 minutes",
-        windowSeconds = 3600L, watermark = "2 hours")
+      TrafficJobs.hopDgim(trafficStream(s, dump), size = "1 hour",
+        slide = "15 minutes", windowSeconds = 3600L, watermark = "2 hours")
     }
   }
 
@@ -1980,12 +1974,17 @@ object StreamQueries {
   def streamDgimTumble(spark: SparkSession, dir: String): DataFrame = {
     val dump = messageDump(spark, dir)
     runToTable(spark) { s =>
-      val parsed = TrafficSource.parse(
-        s.readStream.format("text").load(dump).withColumnRenamed("value", "raw"))
-      TrafficJobs.tumbleDgim(parsed, size = "1 hour", windowSeconds = 3600L,
-        watermark = "2 hours")
+      TrafficJobs.tumbleDgim(trafficStream(s, dump), size = "1 hour",
+        windowSeconds = 3600L, watermark = "2 hours")
     }
   }
+
+  /** The traffic-JSON message dump as a parsed file stream — the input
+    * both reference jobs read.
+    */
+  private def trafficStream(s: SparkSession, dump: String): DataFrame =
+    TrafficSource.parse(
+      s.readStream.format("text").load(dump).withColumnRenamed("value", "raw"))
 
   /** Per-user burst detection on the unbounded stream — the continuous
     * form of `q_rate_spikes`: one watermarked (user, hop-window) count

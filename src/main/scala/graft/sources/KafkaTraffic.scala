@@ -40,9 +40,9 @@ object KafkaTraffic {
     * sink's PRIMARY KEY, StreamingJob.java:60-83 — key equality must
     * match window equality, which the timestamp's canonical string
     * form preserves), value = the whole row as JSON bytes. StreamingSpec
-    * pins the key bytes, the JSON round-trip, and that a compacted
-    * consumer of this projection (last record per key) decodes to
-    * exactly `TrafficJobs.compactedView`'s last-write-wins table.
+    * pins the key bytes, the JSON round-trip, and the last-write-wins
+    * table a compacted consumer of this projection (last record per
+    * key) decodes, on update-mode `TrafficJobs.tumbleDgim` output.
     */
   def upsertProjection(updates: DataFrame): DataFrame =
     updates
@@ -50,12 +50,11 @@ object KafkaTraffic {
         to_json(struct(col("*"))).cast("binary").as("value"))
 
   /** Keyed upsert write: [[upsertProjection]] into the topic. A
-    * consumer of the compacted topic observes last-write-wins per key —
-    * the same contract `TrafficJobs.compactedView` materializes from
-    * the parquet changelog. Update output mode re-produces a key on
-    * every in-window change, which is precisely the upsert-kafka
-    * emission pattern. (`format("kafka")` itself stays deploy-time —
-    * the connector jar and broker exist only there.)
+    * consumer of the compacted topic observes last-write-wins per key.
+    * Update output mode re-produces a key on every in-window change,
+    * which is precisely the upsert-kafka emission pattern.
+    * (`format("kafka")` itself stays deploy-time — the connector jar
+    * and broker exist only there.)
     */
   def upsertSink(updates: DataFrame, bootstrap: String, topic: String,
       checkpoint: String): StreamingQuery =

@@ -1,14 +1,18 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.TrafficSource
+import graft.sources.{KafkaTraffic, TrafficSource}
 import graft.streaming.{TrafficGen, TrafficJobs}
 
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -36,6 +40,36 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.awaitTermination()
     spark.table(name)
   }
+
+  /** One traffic message in the reference producer's format. */
+  private def msg(sec: Long, bit: String, nanos: Int = 0): String = {
+    val iso = java.time.LocalDateTime.ofEpochSecond(sec, nanos, java.time.ZoneOffset.UTC)
+      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+    s"""{"value": "$bit", "timestamp": "$iso"}"""
+  }
+
+  private val fileStamp = new AtomicLong(1704067200000L)
+
+  /** Appends `rows` to `dir` as one text file stamped with a strictly
+    * later mtime than every file appended before it: the file source
+    * orders micro-batches by mtime, and same-millisecond writes would
+    * make that order (and so the watermark's progress) nondeterministic.
+    */
+  private def appendFile(dir: String, rows: Seq[String]): Unit = {
+    import spark.implicits._
+    val before = new java.io.File(dir).list().toSet
+    rows.toDF("raw").coalesce(1).write.mode("append").text(dir)
+    val stamp = fileStamp.addAndGet(60000L)
+    new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && !before(f.getName))
+      .foreach(_.setLastModified(stamp))
+  }
+
+  /** The parsed traffic stream over `dir`, one file per micro-batch. */
+  private def fileTraffic(dir: String): DataFrame =
+    TrafficSource.parse(
+      spark.readStream.format("text").option("maxFilesPerTrigger", "1")
+        .load(dir).withColumnRenamed("value", "raw"))
 
   test("TrafficSource.parse drops malformed JSON and bad timestamps, keeps valid rows") {
     import spark.implicits._
@@ -80,11 +114,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 600 messages over 120 s → two 60 s windows; bit=1 for every 3rd msg
     val base = 1704067200L // 2024-01-01T00:00:00 UTC
     val msgs = (0 until 600).map { i =>
-      val sec = base + i / 5 // 5 msg/s
-      val bit = if (i % 3 == 0) "1" else "0"
-      val iso = java.time.LocalDateTime.ofEpochSecond(sec, i % 5 * 1000, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "$bit", "timestamp": "$iso"}"""
+      // 5 msg/s
+      msg(base + i / 5, if (i % 3 == 0) "1" else "0", nanos = i % 5 * 1000)
     }
     val dir = writeMessages(msgs)
     val parsed = TrafficSource.parse(
@@ -100,12 +131,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming hopDgim emits size/slide windows with estimates in bound") {
     val base = 1704067200L
-    val msgs = (0 until 300).map { i =>
-      val sec = base + i / 5
-      val iso = java.time.LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "1", "timestamp": "$iso"}"""
-    }
+    val msgs = (0 until 300).map(i => msg(base + i / 5, "1"))
     val dir = writeMessages(msgs)
     val parsed = TrafficSource.parse(
       spark.readStream.format("text").load(dir).withColumnRenamed("value", "raw"))
@@ -118,32 +144,75 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(est - 300L) <= 150L + 1)
   }
 
-  test("upsertDgim (flatMapGroupsWithState) re-emits per-window estimates in update mode") {
+  /** Offsets (s past the base time) of the one-bits in four files, one
+    * micro-batch each: w0 [0,60) gets 40, then 20 more alongside 15 in
+    * w1 [60,120); the ones at +300 and +310 then advance the watermark
+    * (2 min) past w0 and w1.
+    */
+  private val fourFileOnes: Seq[Seq[Long]] =
+    Seq(0L until 40L, 40L until 75L, Seq(300L), Seq(310L))
+
+  /** Exact one-bit count of the 60 s window ending `endOffset`. */
+  private def exactOnes(endOffset: Long): Long =
+    fourFileOnes.flatten.count(o => o >= endOffset - 60L && o < endOffset).toLong
+
+  /** The reference's upsert-kafka sink keyed by window_end, in the shape
+    * perfbench's live workload runs: tumbleDgim in update output mode over
+    * the four files, each micro-batch's rows leaving through the keyed
+    * record projection. Rows are (batch id, key, window_end offset,
+    * count_estimate); the query runs once, for both tests that read it.
+    */
+  private lazy val updateModeUpserts: Seq[(Long, String, Long, Long)] = {
+    import spark.implicits._
+    import java.nio.charset.StandardCharsets.UTF_8
     val base = 1704067200L
-    val msgs = (0 until 600).map { i =>
-      val sec = base + i / 5
-      val bit = if (i % 3 == 0) "1" else "0"
-      val iso = java.time.LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "$bit", "timestamp": "$iso"}"""
+    val dir = Files.createTempDirectory("graft_upsert_msgs").toString
+    fourFileOnes.foreach(f => appendFile(dir, f.map(o => msg(base + o, "1"))))
+    val produced = new ConcurrentLinkedQueue[(Long, String, String)]()
+    TrafficJobs.tumbleDgim(fileTraffic(dir)).writeStream
+      .outputMode("update")
+      .option("checkpointLocation", Files.createTempDirectory("graft_upsert_ckpt").toString)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        KafkaTraffic.upsertProjection(batch).collect().foreach { r =>
+          produced.add((batchId, new String(r.getAs[Array[Byte]]("key"), UTF_8),
+            new String(r.getAs[Array[Byte]]("value"), UTF_8)))
+        }
+      }
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+    val valueSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "window_end timestamp, count_estimate bigint")
+    produced.asScala.toSeq.toDF("batch_id", "key", "value")
+      .select($"batch_id", $"key", from_json($"value", valueSchema).as("v"))
+      .select($"batch_id", $"key", unix_timestamp($"v.window_end") - base,
+        $"v.count_estimate")
+      .as[(Long, String, Long, Long)].collect().toSeq
+  }
+
+  test("update-mode tumbleDgim through upsertProjection re-emits each changed window") {
+    val base = 1704067200L
+    val decoded = updateModeUpserts
+    // each key decodes back to the window its record carries (UTC session)
+    decoded.foreach { case (_, key, endOffset, _) =>
+      val keySec = java.time.LocalDateTime.parse(key,
+        java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+        .toEpochSecond(java.time.ZoneOffset.UTC)
+      assert(keySec - base === endOffset, s"key $key on the window ending +$endOffset s")
     }
-    val dir = writeMessages(msgs)
-    val parsed = TrafficSource.parse(
-      spark.readStream.format("text").load(dir).withColumnRenamed("value", "raw"))
-    val name = "spec_upsert_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = TrafficJobs.upsertDgim(parsed).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val out = spark.table(name).collect()
-    // two 60 s windows, each with 100 one-bits; last emission per key
-    // carries the window's final state
-    val lastPerKey = out.groupBy(_.getAs[java.sql.Timestamp]("window_end"))
-      .map { case (_, rs) => rs.last }
-    assert(lastPerKey.size === 2)
-    lastPerKey.foreach { r =>
-      val est = r.getAs[Long]("count_estimate")
-      assert(math.abs(est - 100L) <= 51L, s"est=$est")
+    // window0 is upserted in more than one micro-batch
+    val w0Batches = decoded.filter(_._3 == 60L).map(_._1).distinct
+    assert(w0Batches.length >= 2, s"w0 upserted in batches ${w0Batches.toSeq}")
+  }
+
+  test("update-mode tumbleDgim upserts: the last write per key is in the DGIM bound") {
+    // the last write per key, which a compacted consumer keeps, is within
+    // the DGIM bound of its window's exact count
+    val lastWrite = updateModeUpserts.groupBy(_._3)
+      .map { case (end, hist) => end -> hist.maxBy(_._1)._4 }
+    assert(lastWrite.keySet === Set(60L, 120L, 360L))
+    lastWrite.foreach { case (end, est) =>
+      assert(math.abs(est - exactOnes(end)) <= exactOnes(end) / 2 + 1,
+        s"window ending +$end s: est=$est exact=${exactOnes(end)}")
     }
   }
 
@@ -152,12 +221,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // event timestamps span 3 event-time windows, but a single
     // Trigger.AvailableNow micro-batch arrives at ONE processing time →
     // exactly one proctime window holding the whole stream
-    val msgs = (0 until 180).map { i =>
-      val bit = if (i % 2 == 0) "1" else "0"
-      val iso = java.time.LocalDateTime.ofEpochSecond(base + i, 0, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "$bit", "timestamp": "$iso"}"""
-    }
+    val msgs = (0 until 180).map(i => msg(base + i, if (i % 2 == 0) "1" else "0"))
     val dir = writeMessages(msgs)
     val parsed = TrafficSource.parse(
       spark.readStream.format("text").load(dir).withColumnRenamed("value", "raw"))
@@ -169,89 +233,25 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(est - 90L) <= 46L, s"est=$est")
   }
 
-  test("upsertToLog materializes last-write-wins per window_end across micro-batches") {
-    import spark.implicits._
-    val base = 1704067200L
-    def msg(sec: Long, bit: String) = {
-      val iso = java.time.LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "$bit", "timestamp": "$iso"}"""
-    }
-    val dir = Files.createTempDirectory("graft_upsert_msgs").toString
-    val logDir = Files.createTempDirectory("graft_upsert_log").toString + "/log"
-    val ckpt = Files.createTempDirectory("graft_upsert_ckpt").toString
-    // four files -> four micro-batches (maxFilesPerTrigger=1):
-    //  f1: 40 ones in window0            -> first upsert for window0
-    //  f2: 20 more in window0 + 15 in w1 -> window0 RE-emitted (updated)
-    //  f3: a one at +300s                -> watermark jumps past w0/w1
-    //  f4: a one at +310s                -> timeout batch: w0/w1 finalize
-    (0 until 40).map(i => msg(base + i, "1")).toDF("raw")
-      .coalesce(1).write.mode("append").text(dir)
-    ((40 until 60).map(i => msg(base + i, "1")) ++
-      (60 until 75).map(i => msg(base + i, "1"))).toDF("raw")
-      .coalesce(1).write.mode("append").text(dir)
-    Seq(msg(base + 300, "1")).toDF("raw").coalesce(1).write.mode("append").text(dir)
-    Seq(msg(base + 310, "1")).toDF("raw").coalesce(1).write.mode("append").text(dir)
-
-    val parsed = TrafficSource.parse(
-      spark.readStream.format("text").option("maxFilesPerTrigger", "1")
-        .load(dir).withColumnRenamed("value", "raw"))
-    val q = TrafficJobs.upsertToLog(TrafficJobs.upsertDgim(parsed), logDir, ckpt)
-    q.awaitTermination()
-
-    val log = spark.read.parquet(logDir).collect()
-    val w0End = new java.sql.Timestamp((base + 60) * 1000L)
-    val w1End = new java.sql.Timestamp((base + 120) * 1000L)
-    // window0 was upserted in more than one micro-batch (the reference's
-    // per-batch re-emission under the upsert-Kafka sink)
-    val w0Batches = log.filter(_.getAs[java.sql.Timestamp]("window_end") == w0End)
-      .map(_.getAs[Long]("batch_id")).distinct
-    assert(w0Batches.length >= 2, s"w0 upserted in batches ${w0Batches.toSeq}")
-
-    val view = TrafficJobs.compactedView(spark, logDir).collect()
-      .map(r => r.getAs[java.sql.Timestamp]("window_end") ->
-        ((r.getAs[Long]("count_estimate"), r.getAs[Boolean]("finalized")))).toMap
-    // one row per key, the LAST write winning: finalized estimates for the
-    // two closed windows, within the DGIM bound of their exact counts
-    assert(view.size === log.map(_.getAs[java.sql.Timestamp]("window_end")).distinct.length)
-    val (w0Est, w0Fin) = view(w0End)
-    assert(w0Fin, "window0 should be finalized by the event-time timeout")
-    assert(math.abs(w0Est - 60L) <= 31L, s"w0 est=$w0Est")
-    val (w1Est, w1Fin) = view(w1End)
-    assert(w1Fin, "window1 should be finalized by the event-time timeout")
-    assert(math.abs(w1Est - 15L) <= 8L, s"w1 est=$w1Est")
-    // last-write-wins == the max-batch_id row of the raw log
-    val w0Last = log.filter(_.getAs[java.sql.Timestamp]("window_end") == w0End)
-      .maxBy(r => (r.getAs[Long]("batch_id"), r.getAs[Boolean]("finalized")))
-    assert(w0Last.getAs[Long]("count_estimate") === w0Est)
-  }
-
-  test("kafka upsert projection: key bytes, JSON round-trip, and a compacted " +
-      "consumer decodes to exactly compactedView's last-write-wins table") {
-    // r19 verdict item 5: the broker hop itself is deploy-time, but the
-    // key/value ENCODING — where an upsert sink silently corrupts — is
-    // pure DataFrame→DataFrame and fully verifiable here.
+  test("kafka upsert projection: key bytes, JSON round-trip, last write per key") {
+    // The broker hop itself is deploy-time, but the key/value ENCODING —
+    // where an upsert sink silently corrupts — is pure
+    // DataFrame→DataFrame and fully verifiable here.
     import spark.implicits._
     import java.nio.charset.StandardCharsets.UTF_8
     val w0 = java.sql.Timestamp.valueOf("2024-01-01 00:01:00")
     val w1 = java.sql.Timestamp.valueOf("2024-01-01 00:02:00")
-    // a three-micro-batch upsert changelog: w0 re-emitted twice then
-    // finalized, w1 emitted once then finalized
-    val batches: Seq[(Long, Seq[(java.sql.Timestamp, Long, Boolean)])] = Seq(
-      0L -> Seq((w0, 40L, false)),
-      1L -> Seq((w0, 60L, false), (w1, 15L, false)),
-      3L -> Seq((w0, 61L, true), (w1, 15L, true)))
-    val logDir = Files.createTempDirectory("graft_kproj_log").toString + "/log"
-    batches.foreach { case (bid, rows) =>
-      rows.toDF("window_end", "count_estimate", "finalized")
-        .withColumn("batch_id", lit(bid))
-        .write.mode("append").parquet(logDir)
-    }
+    // a three-micro-batch changelog of update-mode tumbleDgim rows: w0
+    // re-emitted in every batch, w1 in the last two
+    val batches: Seq[(Long, Seq[(java.sql.Timestamp, Long)])] = Seq(
+      0L -> Seq((w0, 40L)),
+      1L -> Seq((w0, 60L), (w1, 15L)),
+      3L -> Seq((w0, 61L), (w1, 15L)))
     // what the kafka sink would produce per micro-batch
     val produced: Seq[(Long, Array[org.apache.spark.sql.Row])] =
       batches.map { case (bid, rows) =>
-        bid -> graft.sources.KafkaTraffic.upsertProjection(
-          rows.toDF("window_end", "count_estimate", "finalized")).collect()
+        bid -> KafkaTraffic.upsertProjection(
+          rows.toDF("window_end", "count_estimate")).collect()
       }
     // 1) key bytes: the UTF-8 of the timestamp's canonical string form
     //    (UTC session) — key equality IS window equality
@@ -261,42 +261,31 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"unexpected key encodings: $keys")
     // 2) JSON round-trip: every value decodes back to its source row
     val updSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "window_end timestamp, count_estimate bigint, finalized boolean")
-    val decodedAll: Seq[(Long, java.sql.Timestamp, Long, Boolean)] =
+      "window_end timestamp, count_estimate bigint")
+    val decodedAll: Seq[(Long, java.sql.Timestamp, Long)] =
       produced.flatMap { case (bid, rows) =>
         rows.toSeq.map { r =>
           val v = new String(r.getAs[Array[Byte]]("value"), UTF_8)
           val d = Seq(v).toDF("j").select(from_json($"j", updSchema)
             .as("s")).select("s.*").collect().head
-          (bid, d.getAs[java.sql.Timestamp]("window_end"),
-            d.getAs[Long]("count_estimate"), d.getAs[Boolean]("finalized"))
+          (bid, d.getAs[java.sql.Timestamp]("window_end"), d.getAs[Long]("count_estimate"))
         }
       }
     assert(decodedAll.toSet === batches.flatMap { case (bid, rows) =>
-      rows.map(r => (bid, r._1, r._2, r._3)) }.toSet,
+      rows.map(r => (bid, r._1, r._2)) }.toSet,
       "JSON values must round-trip to the source rows")
     // 3) a compacted consumer (last record per key across the produce
-    //    order) decodes to exactly compactedView's last-write-wins table
+    //    order) decodes to each window's last write
     val compactedConsumer = decodedAll.groupBy(_._2).map { case (_, hist) =>
-      val last = hist.maxBy(h => (h._1, h._4))
-      (last._2, last._3, last._4)
+      val last = hist.maxBy(_._1)
+      (last._2, last._3)
     }.toSet
-    val view = TrafficJobs.compactedView(spark, logDir).collect()
-      .map(r => (r.getAs[java.sql.Timestamp]("window_end"),
-        r.getAs[Long]("count_estimate"), r.getAs[Boolean]("finalized"))).toSet
-    assert(compactedConsumer === view,
-      s"compacted-topic consumer view $compactedConsumer != compactedView $view")
-    assert(view === Set((w0, 61L, true), (w1, 15L, true)))
+    assert(compactedConsumer === Set((w0, 61L), (w1, 15L)))
   }
 
   test("streaming tumble count resumes from checkpoint exactly-once across restarts") {
     import spark.implicits._
     val base = 1704067200L
-    def msg(sec: Long, bit: String) = {
-      val iso = java.time.LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "$bit", "timestamp": "$iso"}"""
-    }
     val dir = Files.createTempDirectory("graft_ckpt_msgs").toString
     val ckpt = Files.createTempDirectory("graft_ckpt_state").toString
     // batch 1: 40 ones in window 0
@@ -333,73 +322,58 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(second === Map(base -> 60L, (base + 60) -> 15L))
   }
 
-  test("upsertToLog killed between micro-batches resumes from its checkpoint: no lost or duplicated windows") {
-    // The reference leans on Flink checkpoint restore for this (its
-    // docker-compose restart semantics); here the claim is proven for the
-    // flatMapGroupsWithState state store + foreachBatch sink: run the
-    // upsert job over the first half of the input, STOP, restart from the
-    // SAME checkpoint dir with the rest of the input present, and the
-    // compacted view must equal a never-stopped single run over
-    // everything — per-window DGIM state recovered (not recounted from
-    // zero), already-seen files not reprocessed, finalization intact.
+  test("tumbleDgim and hopDgim finalize the same windows across a checkpoint restart") {
+    // The reference leans on Flink checkpoint restore. Each job runs in
+    // append mode over the first two files, stops, and restarts from the
+    // SAME checkpoint with the other two present. It must finalize
+    // exactly the (window, estimate) rows a never-stopped run finalizes:
+    // the DGIM buffers of the windows open at the stop come back from the
+    // state store instead of being recounted, and no seen file is re-read.
     import spark.implicits._
     val base = 1704067200L
-    def msg(sec: Long, bit: String) = {
-      val iso = java.time.LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "$bit", "timestamp": "$iso"}"""
+    val files = fourFileOnes.map(_.map(o => msg(base + o, "1")))
+    def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+    // (window_end offset, estimate) rows emitted, and input rows read
+    def run(job: DataFrame => DataFrame, dir: String,
+        ckpt: String): (Seq[(Long, Long)], Long) = {
+      val out = new ConcurrentLinkedQueue[(Long, Long)]()
+      val q = job(fileTraffic(dir)).writeStream
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.select(unix_timestamp($"window_end") - base, $"count_estimate")
+            .as[(Long, Long)].collect().foreach(out.add)
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      (out.asScala.toSeq, q.recentProgress.map(_.numInputRows).sum)
     }
-    val f1 = (0 until 40).map(i => msg(base + i, "1"))
-    val f2 = (40 until 60).map(i => msg(base + i, "1")) ++
-      (60 until 75).map(i => msg(base + i, "1"))
-    val f3 = Seq(msg(base + 300, "1"))
-    val f4 = Seq(msg(base + 310, "1"))
+    val jobs = Seq[(String, DataFrame => DataFrame)](
+      "tumble" -> (p => TrafficJobs.tumbleDgim(p)),
+      "hop" -> (p => TrafficJobs.hopDgim(p)))
+    jobs.foreach { case (name, job) =>
+      val dir = tmp("graft_restart_msgs")
+      val ckpt = tmp("graft_restart_ckpt")
+      files.take(2).foreach(appendFile(dir, _))
+      val (first, _) = run(job, dir, ckpt)
+      assert(first.isEmpty, s"$name closed a window before the watermark passed it: $first")
+      files.drop(2).foreach(appendFile(dir, _))
+      val (second, secondRead) = run(job, dir, ckpt)
+      assert(secondRead === files.drop(2).flatten.size.toLong,
+        s"$name re-read seen input after the restart: $secondRead rows")
 
-    def appendFile(dir: String, rows: Seq[String]): Unit =
-      rows.toDF("raw").coalesce(1).write.mode("append").text(dir)
-    def runJob(dir: String, logDir: String, ckpt: String): Unit = {
-      val parsed = TrafficSource.parse(
-        spark.readStream.format("text").option("maxFilesPerTrigger", "1")
-          .load(dir).withColumnRenamed("value", "raw"))
-      TrafficJobs.upsertToLog(TrafficJobs.upsertDgim(parsed), logDir, ckpt)
-        .awaitTermination()
+      val singleDir = tmp("graft_single_msgs")
+      files.foreach(appendFile(singleDir, _))
+      val (single, _) = run(job, singleDir, tmp("graft_single_ckpt"))
+      assert((first ++ second).sorted === single.sorted,
+        s"$name: restarted ${(first ++ second).sorted} != never-stopped ${single.sorted}")
+      single.foreach { case (end, est) =>
+        assert(math.abs(est - exactOnes(end)) <= exactOnes(end) / 2 + 1,
+          s"$name window ending +$end s: est=$est exact=${exactOnes(end)}")
+      }
+      if (name == "tumble") assert(single.map(_._1).sorted === Seq(60L, 120L))
+      else assert(single.nonEmpty)
     }
-    def compacted(logDir: String): Map[java.sql.Timestamp, (Long, Boolean)] =
-      TrafficJobs.compactedView(spark, logDir).collect()
-        .map(r => r.getAs[java.sql.Timestamp]("window_end") ->
-          ((r.getAs[Long]("count_estimate"), r.getAs[Boolean]("finalized")))).toMap
-
-    // interrupted run: f1+f2, stop, then f3+f4 from the same checkpoint
-    val dirA = Files.createTempDirectory("graft_resume_msgs").toString
-    val logA = Files.createTempDirectory("graft_resume_log").toString + "/log"
-    val ckptA = Files.createTempDirectory("graft_resume_ckpt").toString
-    appendFile(dirA, f1); appendFile(dirA, f2)
-    runJob(dirA, logA, ckptA)
-    val midWindows = spark.read.parquet(logA)
-      .select("window_end").distinct().count()
-    assert(midWindows >= 1, "first segment should have upserted windows")
-    appendFile(dirA, f3); appendFile(dirA, f4)
-    runJob(dirA, logA, ckptA)
-
-    // reference run: all four files, one never-stopped query
-    val dirB = Files.createTempDirectory("graft_single_msgs").toString
-    val logB = Files.createTempDirectory("graft_single_log").toString + "/log"
-    val ckptB = Files.createTempDirectory("graft_single_ckpt").toString
-    appendFile(dirB, f1); appendFile(dirB, f2); appendFile(dirB, f3); appendFile(dirB, f4)
-    runJob(dirB, logB, ckptB)
-
-    val viewA = compacted(logA)
-    val viewB = compacted(logB)
-    assert(viewA === viewB,
-      s"restarted view $viewA differs from single-run view $viewB")
-    // the restart RESUMED (batch ids continue past the first segment's),
-    // and the pre-stop windows finalized without being re-ingested
-    val batchIds = spark.read.parquet(logA)
-      .select("batch_id").distinct().collect().map(_.getLong(0)).sorted
-    assert(batchIds.length >= 4, s"expected >=4 micro-batches, got ${batchIds.toSeq}")
-    val w0End = new java.sql.Timestamp((base + 60) * 1000L)
-    assert(viewA(w0End)._2, "window0 should finalize after the restart")
-    assert(math.abs(viewA(w0End)._1 - 60L) <= 31L, s"w0 est=${viewA(w0End)._1}")
   }
 
   test("stream-stream interval join emits cross-batch pairs exactly once") {
@@ -452,13 +426,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // session over the SAME source directory, progressing concurrently,
     // each producing exactly the results it produces when run alone.
     val base = 1704067200L
-    val msgs = (0 until 600).map { i =>
-      val sec = base + i / 5
-      val bit = if (i % 3 == 0) "1" else "0"
-      val iso = java.time.LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "$bit", "timestamp": "$iso"}"""
-    }
+    val msgs = (0 until 600).map(i => msg(base + i / 5, if (i % 3 == 0) "1" else "0"))
     val dir = writeMessages(msgs)
     def parsed() = TrafficSource.parse(
       spark.readStream.format("text").load(dir).withColumnRenamed("value", "raw"))
@@ -547,26 +515,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a row arriving AFTER the watermark passed its window is dropped
     // (never resurrects evicted state, never re-emits the window), and
     // every closed window appears exactly once in append output.
-    import spark.implicits._
     val base = 1704067200L
-    def msg(sec: Long, bit: String) = {
-      val iso = java.time.LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "$bit", "timestamp": "$iso"}"""
-    }
     val dir = Files.createTempDirectory("graft_late_msgs").toString
-    // the file source orders batches by modification time; same-ms writes
-    // would make batch order (and thus the watermark race) nondeterministic,
-    // so stamp each appended file with a strictly increasing mtime
-    var stamp = 1704067200000L
-    val stamped = scala.collection.mutable.Set.empty[String]
-    def appendFile(rows: Seq[String]): Unit = {
-      rows.toDF("raw").coalesce(1).write.mode("append").text(dir)
-      stamp += 60000L
-      new java.io.File(dir).listFiles()
-        .filter(f => f.getName.startsWith("part-") && !stamped(f.getName))
-        .foreach { f => f.setLastModified(stamp); stamped += f.getName }
-    }
     // five files -> five ordered micro-batches (maxFilesPerTrigger=1).
     // Spark tracks TWO watermark values per batch (SPARK-24634): late-row
     // FILTERING uses the PREVIOUS batch's watermark (replay-deterministic),
@@ -580,14 +530,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     //      DROPPED (w0's evicted state is never resurrected/re-emitted)
     //  b3/b4: ones at +700/+800 -> eviction wm 580/680 closes the +400
     //      window [360,420) and the +500 window [480,540)
-    appendFile((0 until 10).map(i => msg(base + i, "1")) :+ msg(base + 400, "1"))
-    appendFile(Seq(msg(base + 500, "1")))
-    appendFile((10 until 50).map(i => msg(base + i, "1")))
-    appendFile(Seq(msg(base + 700, "1")))
-    appendFile(Seq(msg(base + 800, "1")))
-    val parsed = TrafficSource.parse(
-      spark.readStream.format("text").option("maxFilesPerTrigger", "1")
-        .load(dir).withColumnRenamed("value", "raw"))
+    appendFile(dir, (0 until 10).map(i => msg(base + i, "1")) :+ msg(base + 400, "1"))
+    appendFile(dir, Seq(msg(base + 500, "1")))
+    appendFile(dir, (10 until 50).map(i => msg(base + i, "1")))
+    appendFile(dir, Seq(msg(base + 700, "1")))
+    appendFile(dir, Seq(msg(base + 800, "1")))
+    val parsed = fileTraffic(dir)
     val name = "late_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = TrafficJobs.tumbleDgim(parsed).writeStream.format("memory")
       .queryName(name).outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -624,11 +572,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the scale-path provider shipped in this Spark build.
     import spark.implicits._
     val base = 1704067200L
-    def msg(sec: Long, bit: String) = {
-      val iso = java.time.LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-      s"""{"value": "$bit", "timestamp": "$iso"}"""
-    }
     val dir = writeMessages((0 until 500).map(i =>
       msg(base + i, if (i % 3 == 0) "1" else "0")))
     def run(provider: Option[String]): Map[java.sql.Timestamp, Long] = {
