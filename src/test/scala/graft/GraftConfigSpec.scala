@@ -25,6 +25,9 @@ class GraftConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
   // to this one
   override def afterAll(): Unit = spark.stop()
 
+  private def withSplittableWrites[A](body: => A): A =
+    GraftConfigSpec.withSplittableWrites(spark)(body)
+
   test("useRocksDbStateStore: a stateful stream on the configured session " +
       "actually runs on the RocksDB provider") {
     val s2 = GraftConfig.useRocksDbStateStore(spark.newSession())
@@ -340,14 +343,13 @@ class GraftConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
         "md5(cast(id*7 as string)), md5(cast(id*13 as string)))").as("p"))
       .select(col("id"), expr("repeat(p, 2)").as("pad"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_cfg_rg").toString
-    val hc = spark.sparkContext.hadoopConfiguration
-    val prior = Option(hc.get("parquet.block.size"))
     try {
       df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/default")
       assert(rowGroups(s"$tmp/default") === 1,
         "parquet default: one row group (the unsplittable shape)")
-      GraftConfig.useSplittableWrites(spark)
-      df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/split")
+      withSplittableWrites {
+        df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/split")
+      }
       assert(rowGroups(s"$tmp/split") >= 2,
         "row-group target applied: the same rows split into several groups")
       // content identical row-for-row — layout only
@@ -355,12 +357,73 @@ class GraftConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
       val b = spark.read.parquet(s"$tmp/split")
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     } finally {
-      prior match {
-        case Some(v) => hc.set("parquet.block.size", v)
-        case None => hc.unset("parquet.block.size")
-      }
       graft.operators.StreamQueries.deleteRecursively(new java.io.File(tmp))
     }
+  }
+
+  test("useSplittableWrites: checkpoint writes of update-mode tumbleDgim " +
+      "start no process, and its rows equal a stock session's") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import spark.implicits._
+    val base = 1704067200L
+    val iso = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+    def msg(sec: Long): String = s"""{"value": "1", "timestamp": "${java.time
+      .LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC).format(iso)}"}"""
+    val dir = Files.createTempDirectory("graft_cfg_msgs")
+    // two files, mtime-ordered: two data micro-batches
+    Seq(0 until 50, 50 until 90).zipWithIndex.foreach { case (secs, i) =>
+      val f = dir.resolve(s"part-$i.txt")
+      Files.write(f, secs.map(s => msg(base + s)).asJava)
+      f.toFile.setLastModified(1704067200000L + i * 60000L)
+    }
+    // (batch id, window_end, count_estimate) rows, and the command line
+    // of every process started while the query ran
+    def run(ckpt: Path): (Seq[(Long, Long, Long)], Seq[String]) = {
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
+      val rec = new Recording()
+      val dump = Files.createTempFile("graft_cfg_forks", ".jfr")
+      try {
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        graft.streaming.TrafficJobs.tumbleDgim(graft.sources.TrafficSource.parse(
+            spark.readStream.option("maxFilesPerTrigger", "1").text(dir.toString)
+              .withColumnRenamed("value", "raw")))
+          .writeStream.outputMode("update")
+          .option("checkpointLocation", ckpt.toString)
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+            batch.select(lit(id), unix_timestamp($"window_end") - base,
+              $"count_estimate").as[(Long, Long, Long)].collect().foreach(out.add)
+          }
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        rec.stop()
+        rec.dump(dump)
+        val commands = RecordingFile.readAllEvents(dump).asScala
+          .map(_.getString("command")).toSeq
+        (out.asScala.toSeq, commands)
+      } finally {
+        rec.close()
+        Files.delete(dump)
+      }
+    }
+    val stockCkpt = Files.createTempDirectory("graft_cfg_stock_ckpt")
+    val graftCkpt = Files.createTempDirectory("graft_cfg_graft_ckpt")
+    try {
+      val (stock, stockForks) = run(stockCkpt)
+      val (forkFree, graftForks) = withSplittableWrites(run(graftCkpt))
+      assert(stock.map(_._1).distinct.size >= 2, s"two micro-batches: $stock")
+      assert(forkFree.sorted === stock.sorted)
+      // the probe sees the forks it is meant to catch: without libhadoop
+      // the stock filesystem shells out per checkpoint file
+      if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
+        assert(stockForks.exists(_.contains(stockCkpt.toString)))
+      val named = graftForks.filter(_.contains(graftCkpt.toString))
+      assert(named.isEmpty, s"${named.size} processes named the checkpoint: " +
+        named.take(3).mkString("; "))
+    } finally Seq(dir, stockCkpt, graftCkpt).foreach(p =>
+      graft.operators.StreamQueries.deleteRecursively(p.toFile))
   }
 
   test("useAdaptiveCachedPlanPartitioning: AQE coalesces the shuffle under a " +
@@ -474,5 +537,25 @@ class GraftConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (cTl == cFlat) agree += 1
     }
     assert(agree >= 450, s"two-level agreed with flat on only $agree/500")
+  }
+}
+
+object GraftConfigSpec {
+
+  /** Runs `body` after [[GraftConfig.useSplittableWrites]] on `spark`,
+    * then restores every Hadoop key that call sets, so the rest of a
+    * suite sharing the session runs on the stock defaults.
+    */
+  def withSplittableWrites[A](spark: SparkSession)(body: => A): A = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val prior = Seq("parquet.block.size", GraftConfig.LocalFileContextImplKey)
+      .map(k => k -> Option(hc.get(k)))
+    try {
+      GraftConfig.useSplittableWrites(spark)
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => hc.set(k, v)
+      case (k, None) => hc.unset(k)
+    }
   }
 }

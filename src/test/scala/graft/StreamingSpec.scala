@@ -351,22 +351,40 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val jobs = Seq[(String, DataFrame => DataFrame)](
       "tumble" -> (p => TrafficJobs.tumbleDgim(p)),
       "hop" -> (p => TrafficJobs.hopDgim(p)))
+    // relative path -> POSIX mode of every file and directory under `root`
+    def tree(root: String): Map[String, String] = {
+      val r = java.nio.file.Paths.get(root)
+      val paths = Files.walk(r)
+      try paths.iterator().asScala.filter(_ != r).map(p => r.relativize(p)
+        .toString -> java.nio.file.attribute.PosixFilePermissions.toString(
+          Files.getPosixFilePermissions(p))).toMap
+      finally paths.close()
+    }
     jobs.foreach { case (name, job) =>
-      val dir = tmp("graft_restart_msgs")
-      val ckpt = tmp("graft_restart_ckpt")
-      files.take(2).foreach(appendFile(dir, _))
-      val (first, _) = run(job, dir, ckpt)
-      assert(first.isEmpty, s"$name closed a window before the watermark passed it: $first")
-      files.drop(2).foreach(appendFile(dir, _))
-      val (second, secondRead) = run(job, dir, ckpt)
-      assert(secondRead === files.drop(2).flatten.size.toLong,
-        s"$name re-read seen input after the restart: $secondRead rows")
-
       val singleDir = tmp("graft_single_msgs")
       files.foreach(appendFile(singleDir, _))
       val (single, _) = run(job, singleDir, tmp("graft_single_ckpt"))
-      assert((first ++ second).sorted === single.sorted,
-        s"$name: restarted ${(first ++ second).sorted} != never-stopped ${single.sorted}")
+      // arms: stock LocalFs on both segments; stock LocalFs before the
+      // stop and graft's ForkFreeLocalFs after it, on the same checkpoint
+      val trees = Seq("stock", "stock->graft").map { arm =>
+        val dir = tmp("graft_restart_msgs")
+        val ckpt = tmp("graft_restart_ckpt")
+        files.take(2).foreach(appendFile(dir, _))
+        val (first, _) = run(job, dir, ckpt)
+        assert(first.isEmpty, s"$name/$arm closed a window before the watermark passed it: $first")
+        files.drop(2).foreach(appendFile(dir, _))
+        val (second, secondRead) =
+          if (arm == "stock") run(job, dir, ckpt)
+          else GraftConfigSpec.withSplittableWrites(spark)(run(job, dir, ckpt))
+        assert(secondRead === files.drop(2).flatten.size.toLong,
+          s"$name/$arm re-read seen input after the restart: $secondRead rows")
+        assert((first ++ second).sorted === single.sorted,
+          s"$name/$arm: restarted ${(first ++ second).sorted} != never-stopped ${single.sorted}")
+        tree(ckpt)
+      }
+      // same file names (.crc sidecars included) and the same modes
+      assert(trees(1) === trees(0), s"$name: checkpoint trees differ")
+      assert(trees(0).keys.exists(_.endsWith(".delta.crc")), trees(0).keys)
       single.foreach { case (end, est) =>
         assert(math.abs(est - exactOnes(end)) <= exactOnes(end) / 2 + 1,
           s"$name window ending +$end s: est=$est exact=${exactOnes(end)}")
