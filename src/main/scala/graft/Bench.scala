@@ -141,9 +141,12 @@ object Bench {
         .flatMapGroups((k, it) => Iterator.single((k, it.size))).count()
     }
     // neutral STREAMING warm-up on synthetic data: micro-batch planner,
-    // state-store provider init, streaming codegen paths, checkpoint +
-    // commit-log I/O, and all three state formats the suite uses
-    // (keyed dedup, windowed agg, session store, typed fMGWS). Without
+    // state-store provider init, checkpoint + commit-log I/O, and all
+    // three state formats the suite uses (keyed dedup, windowed agg,
+    // session store, typed fMGWS). Its sessions come from
+    // GraftConfig.newSession, so the classes it compiles land in the one
+    // codegen cache the rows use; under Spark's default per-session
+    // artifact isolation no row could reuse them. Without
     // it an ISOLATED streaming query absorbs ~1.5-2 s of this machinery
     // that in-suite runs amortize across 33 streaming rows — the r11
     // drifter attribution measured the same rows at 3.0-4.4 s isolated
@@ -157,7 +160,7 @@ object Bench {
           (col("id") % 37).as("k"))
         .write.mode("overwrite").parquet(s"$tmp/t.parquet")
       def run(mode: String)(build: SparkSession => org.apache.spark.sql.DataFrame): Unit = {
-        val s2 = spark.newSession()
+        val s2 = GraftConfig.newSession(spark)
         s2.conf.set("spark.sql.shuffle.partitions", "8")
         val q = build(s2).writeStream.format("memory")
           .queryName("warm_" + mode + math.abs(mode.hashCode))

@@ -311,7 +311,7 @@ object Clusters {
     */
   def streamClustersDelta(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val s = spark.newSession()
+    val s = graft.GraftConfig.newSession(spark)
     s.conf.set("spark.sql.shuffle.partitions", "8")
     val pairsDir = deltaPairsDump(s, dir)
     val base = baseClusterLabels(s, dir)

@@ -121,9 +121,10 @@ object StreamQueries {
     * shuffle partition, each with its own checkpoint files per
     * micro-batch — at the gate's data volume that fixed I/O dominates.
     * Each harness stream therefore runs on a DEDICATED cloned session
-    * (`spark.newSession()`: own SQLConf, shared SparkContext/catalog)
-    * whose state-partition count has a floor of 8, so the setting can
-    * never leak to concurrent users of the shared session (results are
+    * ([[graft.GraftConfig.newSession]]: own SQLConf, shared
+    * SparkContext/catalog, the parent's codegen cache) whose
+    * state-partition count has a floor of 8, so the setting can never
+    * leak to concurrent users of the shared session (results are
     * partitioning-independent; a real deployment sizes this to the key
     * cardinality instead). The floor is right at gate SFs, but a
     * CPU-heavy stateful aggregation over a 100×-class ingest runs its
@@ -153,7 +154,7 @@ object StreamQueries {
   private def runToTableSized(spark0: SparkSession, mode: String,
       inputBytes: Long)(
       build: SparkSession => DataFrame): DataFrame = {
-    val spark = spark0.newSession()
+    val spark = graft.GraftConfig.newSession(spark0)
     val cores = spark.sparkContext.defaultParallelism
     val heapCap = Runtime.getRuntime.maxMemory() / (512L << 20)
     val parts = math.max(8L,

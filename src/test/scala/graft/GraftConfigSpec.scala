@@ -361,48 +361,68 @@ class GraftConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  private val TrafficBase = 1704067200L
+
+  /** Two mtime-ordered files of traffic messages (value "1", one a
+    * second from `TrafficBase`), so a one-file trigger reads them as two
+    * micro-batches.
+    */
+  private def writeTrafficFiles(): java.nio.file.Path = {
+    import scala.jdk.CollectionConverters._
+    val iso = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+    def msg(sec: Long): String = s"""{"value": "1", "timestamp": "${java.time
+      .LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC).format(iso)}"}"""
+    val dir = java.nio.file.Files.createTempDirectory("graft_cfg_msgs")
+    Seq(0 until 50, 50 until 90).zipWithIndex.foreach { case (secs, i) =>
+      val f = dir.resolve(s"part-$i.txt")
+      java.nio.file.Files.write(f, secs.map(s => msg(TrafficBase + s)).asJava)
+      f.toFile.setLastModified(TrafficBase * 1000L + i * 60000L)
+    }
+    dir
+  }
+
+  /** Update-mode `tumbleDgim` over `dir` on `s`, one file per micro-batch:
+    * its (batch id, window_end - `TrafficBase`, count_estimate) rows.
+    */
+  private def tumbleRows(s: SparkSession, dir: java.nio.file.Path,
+      ckpt: java.nio.file.Path): Seq[(Long, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    import s.implicits._
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
+    graft.streaming.TrafficJobs.tumbleDgim(graft.sources.TrafficSource.parse(
+        s.readStream.option("maxFilesPerTrigger", "1").text(dir.toString)
+          .withColumnRenamed("value", "raw")))
+      .writeStream.outputMode("update")
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        batch.select(lit(id), unix_timestamp($"window_end") - TrafficBase,
+          $"count_estimate").as[(Long, Long, Long)].collect().foreach(out.add)
+      }
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    out.asScala.toSeq.sorted
+  }
+
   test("useSplittableWrites: checkpoint writes of update-mode tumbleDgim " +
       "start no process, and its rows equal a stock session's") {
     import java.nio.file.{Files, Path}
     import scala.jdk.CollectionConverters._
     import jdk.jfr.Recording
     import jdk.jfr.consumer.RecordingFile
-    import spark.implicits._
-    val base = 1704067200L
-    val iso = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-    def msg(sec: Long): String = s"""{"value": "1", "timestamp": "${java.time
-      .LocalDateTime.ofEpochSecond(sec, 0, java.time.ZoneOffset.UTC).format(iso)}"}"""
-    val dir = Files.createTempDirectory("graft_cfg_msgs")
-    // two files, mtime-ordered: two data micro-batches
-    Seq(0 until 50, 50 until 90).zipWithIndex.foreach { case (secs, i) =>
-      val f = dir.resolve(s"part-$i.txt")
-      Files.write(f, secs.map(s => msg(base + s)).asJava)
-      f.toFile.setLastModified(1704067200000L + i * 60000L)
-    }
-    // (batch id, window_end, count_estimate) rows, and the command line
-    // of every process started while the query ran
+    val dir = writeTrafficFiles()
+    // the query's rows, and the command line of every process started
+    // while it ran
     def run(ckpt: Path): (Seq[(Long, Long, Long)], Seq[String]) = {
-      val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
       val rec = new Recording()
       val dump = Files.createTempFile("graft_cfg_forks", ".jfr")
       try {
         rec.enable("jdk.ProcessStart")
         rec.start()
-        graft.streaming.TrafficJobs.tumbleDgim(graft.sources.TrafficSource.parse(
-            spark.readStream.option("maxFilesPerTrigger", "1").text(dir.toString)
-              .withColumnRenamed("value", "raw")))
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            batch.select(lit(id), unix_timestamp($"window_end") - base,
-              $"count_estimate").as[(Long, Long, Long)].collect().foreach(out.add)
-          }
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        val rows = tumbleRows(spark, dir, ckpt)
         rec.stop()
         rec.dump(dump)
         val commands = RecordingFile.readAllEvents(dump).asScala
           .map(_.getString("command")).toSeq
-        (out.asScala.toSeq, commands)
+        (rows, commands)
       } finally {
         rec.close()
         Files.delete(dump)
@@ -414,7 +434,7 @@ class GraftConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (stock, stockForks) = run(stockCkpt)
       val (forkFree, graftForks) = withSplittableWrites(run(graftCkpt))
       assert(stock.map(_._1).distinct.size >= 2, s"two micro-batches: $stock")
-      assert(forkFree.sorted === stock.sorted)
+      assert(forkFree === stock)
       // the probe sees the forks it is meant to catch: without libhadoop
       // the stock filesystem shells out per checkpoint file
       if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
@@ -424,6 +444,73 @@ class GraftConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
         named.take(3).mkString("; "))
     } finally Seq(dir, stockCkpt, graftCkpt).foreach(p =>
       graft.operators.StreamQueries.deleteRecursively(p.toFile))
+  }
+
+  test("useSplittableWrites: a second update-mode tumbleDgim run on a fresh " +
+      "checkpoint adds almost no Janino compiles, and both runs' rows equal " +
+      "a stock session's") {
+    val dir = writeTrafficFiles()
+    // the query's rows and the Janino compiles it added
+    def run(s: SparkSession): (Seq[(Long, Long, Long)], Long) = {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_cfg_codegen_ckpt")
+      val before = GraftConfigSpec.compiles
+      try (tumbleRows(s, dir, ckpt), GraftConfigSpec.compiles - before)
+      finally graft.operators.StreamQueries.deleteRecursively(ckpt.toFile)
+    }
+    try {
+      val stockSession = spark.newSession()
+      val (stock, _) = run(stockSession)
+      val (stock2, stockAdded) = run(stockSession)
+      val configured = spark.newSession()
+      val (graft1, graft2, graftAdded) =
+        GraftConfigSpec.withSplittableWrites(configured) {
+          val (r1, _) = run(configured)
+          val (r2, added) = run(configured)
+          (r1, r2, added)
+        }
+      assert(stock.map(_._1).distinct.size >= 2, s"two micro-batches: $stock")
+      assert(stock2 === stock && graft1 === stock && graft2 === stock)
+      // the probe sees what it is meant to catch: each stock query runs
+      // in an isolated clone that compiles its classes again
+      assert(stockAdded >= 10, s"stock second run compiled $stockAdded classes")
+      assert(graftAdded <= 4, s"configured second run compiled $graftAdded " +
+        s"classes (stock: $stockAdded)")
+    } finally graft.operators.StreamQueries.deleteRecursively(dir.toFile)
+  }
+
+  test("GraftConfig.newSession passes the codegen default on: a second " +
+      "runToTableSized-backed row compiles almost nothing") {
+    import graft.operators.StreamQueries
+    // an events table of 3,000 rows two seconds apart, every third a click
+    val sf = java.nio.file.Files.createTempDirectory("graft_cfg_events").toString
+    spark.range(3000).select(
+        when(col("id") % 3 === 0, "click").otherwise("view").as("event_type"),
+        expr("timestamp_seconds(1704067200 + id * 2)").as("ts"))
+      .write.parquet(s"$sf/events.parquet")
+    // the row's sorted rows and the Janino compiles it added
+    def rows(s: SparkSession): (Seq[String], Long) = {
+      val before = GraftConfigSpec.compiles
+      val out = StreamQueries.streamDgimTumble(s, sf).collect().map(_.toString).sorted.toSeq
+      StreamQueries.releaseHarnessSinks()
+      (out, GraftConfigSpec.compiles - before)
+    }
+    try {
+      val stockSession = spark.newSession()
+      rows(stockSession)
+      val (stock, stockAdded) = rows(stockSession)
+      val configured = spark.newSession()
+      val (first, second, added) = GraftConfigSpec.withSplittableWrites(configured) {
+        val (r1, _) = rows(configured)
+        val (r2, a2) = rows(configured)
+        (r1, r2, a2)
+      }
+      assert(stock.nonEmpty && first === stock && second === stock)
+      assert(stockAdded >= 10, s"stock second row compiled $stockAdded classes")
+      assert(added <= 4, s"configured second row compiled $added classes " +
+        s"(stock: $stockAdded)")
+    } finally Seq(graft.sources.DumpCache.dirFor("graft_traffic_msgs", sf,
+        "events.parquet"), sf).foreach(p =>
+      StreamQueries.deleteRecursively(new java.io.File(p)))
   }
 
   test("useAdaptiveCachedPlanPartitioning: AQE coalesces the shuffle under a " +
@@ -543,19 +630,30 @@ class GraftConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
 object GraftConfigSpec {
 
   /** Runs `body` after [[GraftConfig.useSplittableWrites]] on `spark`,
-    * then restores every Hadoop key that call sets, so the rest of a
-    * suite sharing the session runs on the stock defaults.
+    * then restores every Hadoop and session key that call sets, so the
+    * rest of a suite sharing the session runs on the stock defaults.
     */
   def withSplittableWrites[A](spark: SparkSession)(body: => A): A = {
     val hc = spark.sparkContext.hadoopConfiguration
     val prior = Seq("parquet.block.size", GraftConfig.LocalFileContextImplKey)
       .map(k => k -> Option(hc.get(k)))
+    val priorIsolation = spark.conf.getOption(GraftConfig.ArtifactIsolationKey)
     try {
       GraftConfig.useSplittableWrites(spark)
       body
-    } finally prior.foreach {
-      case (k, Some(v)) => hc.set(k, v)
-      case (k, None) => hc.unset(k)
+    } finally {
+      prior.foreach {
+        case (k, Some(v)) => hc.set(k, v)
+        case (k, None) => hc.unset(k)
+      }
+      priorIsolation match {
+        case Some(v) => spark.conf.set(GraftConfig.ArtifactIsolationKey, v)
+        case None => spark.conf.unset(GraftConfig.ArtifactIsolationKey)
+      }
     }
   }
+
+  /** Janino compiles so far in this JVM. */
+  def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }
