@@ -22,80 +22,14 @@ import org.apache.spark.sql.SparkSession
   *    execution against already-published artifacts — the steady state
   *    of a deployment — instead of billing one-time derivations to
   *    whichever query first touches each dump.
-  *  - SPARK_GRAFT_PASSES=n (default 1) re-runs the suite n times and
-  *    reports the LAST pass — local warm-vs-cold attribution; the driver
-  *    sets nothing and always measures the default cold pass.
+  *  - Rows run through [[Harness.run]] on a [[Harness.session]], so the
+  *    Verify dump executes the plans timed here. The timed action is
+  *    `count`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // r18 verdict item 2, resolved by measurement (decades_r19 Sections
-    // C/C2): the suite runs the SHIPPED size-conditioned state-store
-    // recommendation, made executable. Default "auto" = the four
-    // heavy-state harness rows (delta-LSH fold, audit ladder, session
-    // stores — 0.2-3.7 GB of state at 100×) flip to RocksDB+changelog
-    // via StreamQueries.harnessStateStore WHEN the corpus is at
-    // 100×-class scale (documents >= GraftConfig.StateStoreFlipDocs);
-    // everything else stays heap. Both halves are measured, same box,
-    // committed at bench_raw/r19/: at 100× the flip is 0.67-0.94× on
-    // exactly those rows (delta_lsh 157.9→105.2 s) and 1.3-4.4×
-    // AGAINST on high-throughput small-state rows (slide_distinct
-    // 34.3→152.1 s — per-row JNI, no sync term to delete since
-    // harness checkpoints are tmpfs); at sf0.1 every row's state fits
-    // heap and a global flip costs +69 s of fixed store overhead
-    // (bench_local_r19_heap.json vs the rocksdb-changelog arm).
-    // SPARK_GRAFT_STATESTORE=heap|rocksdb|rocksdb-changelog forces a
-    // GLOBAL provider (SparkConf-level, inherited by every harness
-    // clone) for A/B work.
-    // closed value set (r19 ADVICE: the old catch-all silently ran a
-    // typo'd A/B arm as rocksdb-changelog) — anything unrecognized
-    // warns loudly and falls back to auto, the shipped default
-    val stateStoreRaw = sys.env.getOrElse("SPARK_GRAFT_STATESTORE", "auto")
-    val stateStore = stateStoreRaw match {
-      case v @ ("auto" | "heap" | "rocksdb" | "rocksdb-changelog") => v
-      case other =>
-        System.err.println(s"[bench] UNRECOGNIZED SPARK_GRAFT_STATESTORE=" +
-          s"'$other' (valid: auto|heap|rocksdb|rocksdb-changelog) — " +
-          "falling back to 'auto'")
-        "auto"
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // r20 suite hygiene: a terminated harness stream's state-store
-      // providers stay cached in StateStore.loadedProviders until the
-      // MAINTENANCE task notices the query is gone — at the default
-      // 60 s interval a fast-moving suite stacks many rows' heap state
-      // (GB-class at 100×: one session-window row alone holds ~9.5M
-      // state rows) before anything unloads. 15 s bounds that overhang
-      // at ~4 rows' state with no semantic effect (maintenance only
-      // compacts snapshots and unloads INACTIVE providers).
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "15s")
-    val builder = stateStore match {
-      case "auto" | "heap" => builder0
-      case rocks =>
-        builder0
-          .config("spark.sql.streaming.stateStore.providerClass",
-            GraftConfig.RocksDbProvider)
-          .config("spark.sql.streaming.stateStore.rocksdb" +
-            ".changelogCheckpointing.enabled",
-            (rocks != "rocksdb").toString)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // splittable row groups for every parquet this process writes
-    // (staged DumpCache artifacts, sink round-trips) — content
-    // identical, scans of the staged artifacts parallelize (r20
-    // optimization round; measured 17× on the 100× single-file scan)
-    GraftConfig.useSplittableWrites(spark)
-    // let AQE coalesce shuffles that feed/read a .cache() — without it
-    // every cached subtree keeps the static shuffle-partition count and
-    // per-task fixed costs grow with the core count instead of the data
-    // (r21: full cold sf0.1 suite 162.5→143.9 s, measured rows in the
-    // GraftConfig scaladoc)
-    GraftConfig.useAdaptiveCachedPlanPartitioning(spark)
+    val spark = Harness.session(Harness.cpus)
     // full-column warm-up scans (noop sink: decode every column, write
     // nothing) so per-query timings measure the operator, not whichever
     // query first faults each table's pages in; also primes the typed
@@ -143,30 +77,22 @@ object Bench {
     // neutral STREAMING warm-up on synthetic data: micro-batch planner,
     // state-store provider init, checkpoint + commit-log I/O, and all
     // three state formats the suite uses (keyed dedup, windowed agg,
-    // session store, typed fMGWS). Its sessions come from
-    // GraftConfig.newSession, so the classes it compiles land in the one
-    // codegen cache the rows use; under Spark's default per-session
-    // artifact isolation no row could reuse them. Without
-    // it an ISOLATED streaming query absorbs ~1.5-2 s of this machinery
-    // that in-suite runs amortize across 33 streaming rows — the r11
-    // drifter attribution measured the same rows at 3.0-4.4 s isolated
-    // vs 1.4-2.0 s in-suite, all of it first-touch, none of it plan.
+    // session store, typed fMGWS). Each shape runs through runToTable as
+    // the rows do, so the classes it compiles land in the one codegen
+    // cache the rows use and its sink views are dropped once drained.
+    // Without it an ISOLATED streaming query absorbs ~1.5-2 s of this
+    // machinery that in-suite runs amortize across 33 streaming rows:
+    // the same rows measured 3.0-4.4 s isolated vs 1.4-2.0 s in-suite,
+    // all of it first-touch, none of it plan.
     locally {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+      import graft.operators.StreamQueries.{deleteRecursively, runToTable}
       val tmp = java.nio.file.Files.createTempDirectory("graft_warm_stream")
       spark.range(1000)
         .select(expr("timestamp_micros(1700000000000000 + id * 1000000)").as("ts"),
           (col("id") % 37).as("k"))
         .write.mode("overwrite").parquet(s"$tmp/t.parquet")
-      def run(mode: String)(build: SparkSession => org.apache.spark.sql.DataFrame): Unit = {
-        val s2 = GraftConfig.newSession(spark)
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = build(s2).writeStream.format("memory")
-          .queryName("warm_" + mode + math.abs(mode.hashCode))
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
       // point at the written directory itself — a pathGlobFilter of
       // "t.parquet" matches only the directory name, never its
       // part-*.parquet files, so the warm-up streams were processing
@@ -174,15 +100,15 @@ object Bench {
       def src(s2: SparkSession) = s2.readStream.schema("ts timestamp, k bigint")
         .parquet(s"$tmp/t.parquet")
         .withWatermark("ts", "10 minutes")
-      run("append") { s2 =>
+      runToTable(spark, "append") { s2 =>
         src(s2).dropDuplicates("k")
           .groupBy(window(col("ts"), "1 minute"), col("k")).count()
       }
-      run("complete") { s2 =>
+      runToTable(spark, "complete") { s2 =>
         src(s2).groupBy(col("k"), session_window(col("ts"), "2 minutes"))
           .agg(count(lit(1)).as("n")).select(col("k"), col("n"))
       }
-      run("append") { s2 =>
+      runToTable(spark, "append") { s2 =>
         import s2.implicits._
         src(s2).as[(java.sql.Timestamp, Long)].groupByKey(_._2)
           .flatMapGroupsWithState[Long, (Long, Long)](
@@ -191,6 +117,7 @@ object Bench {
             st.update(n); Iterator.single((k, n))
           }.toDF("k", "n")
       }
+      deleteRecursively(tmp.toFile)
     }
     // the real events file-stream source path (schema probe + listing +
     // parquet streaming read): its first-touch is ~1.5-2 s and otherwise
@@ -199,87 +126,25 @@ object Bench {
     // explicit staging pre-pass: publish every shared artifact before
     // any query is timed; itemized separately in the output line
     val staging = Staging.stageAll(spark, sfDir)
-    // optional comma-separated subset for targeted local timing; the
-    // driver sets no filter and always measures the full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(keys) => SparkEntry.queries.filter { case (k, _) => keys(k) }
-      case None => SparkEntry.queries
-    }
-    // pinned order: alphabetical (first-touch costs are now absorbed by
-    // the staging pre-pass, so no query needs force-ordering)
-    val ordered = selected.toSeq.sortBy(_._1)
-    val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(1)
-    // the size condition of the auto policy: documents row count (the
-    // proxy the auto-sizing rules already key on) — at sf0.1 the
-    // corpus is 5k docs (every row's state fits heap), the 100×
+    // the size condition of the heavy-row state-store rule: at sf0.1
+    // the corpus is 5k docs (every row's state fits heap), the 100×
     // fixture is 500k (the heavy rows' state is 0.2-3.7 GB)
-    val autoFlip = stateStore == "auto" &&
-      graft.sources.Tables.documents(spark, sfDir).count() >=
-        GraftConfig.StateStoreFlipDocs
-    // Timed action (r20, guide §1.4): the default stays `count` — the
-    // driver's standing methodology, kept so every BENCH_rN row remains
-    // comparable — but count() lets the optimizer PRUNE map-only
-    // projections (a stateless scoring row times the parquet scan, not
-    // the scoring; its streaming twin, drained through a memory sink,
-    // pays full compute — the measured 100× asymmetry: text_pii 0.59 s
-    // vs q_stream_pii 91.3 s in the r19 map). SPARK_GRAFT_ACTION=noop
-    // times `df.write.format("noop")` instead — every column of every
-    // row computed and discarded — for honest like-for-like local
-    // A/Bs. Unrecognized values warn and fall back to count.
-    val timedAction: org.apache.spark.sql.DataFrame => Unit =
-      sys.env.getOrElse("SPARK_GRAFT_ACTION", "count") match {
-        case "noop" => df => df.write.format("noop").mode("overwrite").save()
-        case "count" => df => { df.count(); () }
-        case other =>
-          System.err.println(s"[bench] UNRECOGNIZED SPARK_GRAFT_ACTION=" +
-            s"'$other' (valid: count|noop) — falling back to 'count'")
-          df => { df.count(); () }
-      }
-    var results = Seq.empty[(String, Double)]
-    // per-row EFFECTIVE state-store provider, observed from each harness
-    // stream's resolved session conf (r19 verdict item 3: the map itself
-    // must prove which store each heavy row ran — Bench recorded only
-    // the global mode, so the 100× delta-LSH number couldn't be
-    // attributed to store vs disk without an isolated arm). Rows that
-    // run no harness stream never set the observable and stay absent.
-    var rowProviders = Map.empty[String, String]
-    for (_ <- 1 to passes) {
-      results = ordered.map { case (name, fn) =>
-        val override_ =
-          if (autoFlip && GraftConfig.HeavyStateHarnessRows(name))
-            Some("rocksdb-changelog")
-          else None
-        graft.operators.StreamQueries.lastStateStore = None
-        val t0 = System.nanoTime()
-        val ok = graft.operators.StreamQueries.harnessStateStore
-          .withValue(override_) {
-            try { timedAction(fn(spark, sfDir)); true } catch {
-              case e: Throwable =>
-                // keep the row (visible -1 sentinel) but make the failure loud
-                System.err.println(
-                  s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-                false
-            }
-          }
-        graft.operators.StreamQueries.lastStateStore.foreach { p =>
-          rowProviders += name -> p
-        }
-        // the row is consumed — drop its memory-sink temp view(s) so
-        // the sink's driver-held rows don't stack across the suite
-        // (suite hygiene, not part of the row's work: outside the timer)
-        graft.operators.StreamQueries.releaseHarnessSinks()
-        // and release the row's .cache() pins: operator caches are
-        // per-row devices against plan re-execution, never cross-row
-        // state, but the block manager pins them for the rest of the
-        // suite (GB-class at 100× — r20 ADVICE on candFp/baseCandOcc)
-        // and a later row that silently reuses an earlier row's cached
-        // subtree gets an order-dependent timing. Outside the timer.
-        spark.catalog.clearCache()
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }
+    val autoFlip = Harness.flipsHeavyRows(spark, sfDir)
+    // Timed action: `count`, the suite's standing methodology, kept so
+    // every BENCH_rN row remains comparable. count() lets the optimizer
+    // prune map-only projections (a stateless scoring row times the
+    // parquet scan, not the scoring; its streaming twin, drained through
+    // a memory sink, pays full compute: text_pii 0.59 s vs q_stream_pii
+    // 91.3 s in a 100× map).
+    val rows = Harness.run(spark, sfDir, SparkEntry.queries, autoFlip) {
+      (_, df) => df.count(); ()
     }
+    val results = rows.map { case (k, r) => k -> r.seconds }
+    // per-row EFFECTIVE state-store provider, observed from each harness
+    // stream's resolved session conf, so the map itself proves which
+    // store each heavy row ran. Rows that run no harness stream have
+    // none and stay absent.
+    val rowProviders = rows.flatMap { case (k, r) => r.stateStore.map(k -> _) }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val st = staging.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -337,14 +202,14 @@ object Bench {
     }
     val viol = violations.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val rowSt = rowProviders.toSeq.sortBy(_._1)
+    val rowSt = rowProviders
       .map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
     // free-text environment annotation for the committed record (r19
     // verdict item 7: ceiling violations on a degraded box must carry
     // the gate reading so a future regression is distinguishable from
-    // the environment floor) — the sweep scripts pass the boxhealth
-    // gate summary through SPARK_GRAFT_GATE_NOTE
+    // the environment floor). No script sets SPARK_GRAFT_GATE_NOTE: set
+    // it by hand, e.g. to the scripts/boxhealth.sh gate summary
     val gateNote = sys.env.get("SPARK_GRAFT_GATE_NOTE")
       .map(n => s""","gate_note":"${n.replace("\\", "\\\\")
         .replace("\"", "\\\"")}"""").getOrElse("")
@@ -353,9 +218,8 @@ object Bench {
         s""""staging":$st,"staging_total":$stagingTotal,""" +
         s""""ceiling_sec":${if (ceiling == Double.MaxValue) "null" else ceiling},""" +
         s""""ceiling_violations":$viol,"stateStore":"${
-          if (stateStore == "auto")
-            (if (autoFlip) "auto-flip" else "auto-heap")
-          else stateStore}","rowStateStore":$rowSt$gateNote,"sf":"$sfDir"}"""
+          if (autoFlip) "auto-flip" else "auto-heap"}",""" +
+        s""""rowStateStore":$rowSt$gateNote,"sf":"$sfDir"}"""
     println(line)
     // the driver's BENCH_rN.json keeps only a truncated stdout tail, so
     // also persist the FULL per-query map to a parseable file (committed

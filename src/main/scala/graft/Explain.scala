@@ -1,27 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: dump formatted physical plans for plan audits
-  * (pushdown, broadcast, codegen spans). Usage: runMain graft.Explain [keys...]
+  * (pushdown, broadcast, codegen spans) under the session and row loop
+  * the suite runs. Usage: runMain graft.Explain [keys...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConfig.useSplittableWrites(spark)
-    // plans must be captured under the suite's shipped config (r21)
-    GraftConfig.useAdaptiveCachedPlanPartitioning(spark)
-    val keys = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    keys.foreach { k =>
+    val spark = Harness.session(Harness.cpus)
+    val rows = if (args.isEmpty) SparkEntry.queries
+      else args.map(k => k -> SparkEntry.queries(k)).toMap
+    Harness.run(spark, dir, rows, Harness.flipsHeavyRows(spark, dir)) { (k, df) =>
       println(s"\n=================== $k ===================")
-      try println(SparkEntry.queries(k)(spark, dir).queryExecution.explainString(
+      println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
-      catch { case e: Throwable => println(s"explain failed: $e") }
     }
     spark.stop()
   }

@@ -345,27 +345,23 @@ object DeltaLshCycle {
   }
 }
 
-/** Dev tool: run a streaming harness query and print its final
-  * StreamingQueryProgress — the state-store row/byte counts behind
-  * SURVEY §6's O(log²W) DGIM state audit.
+/** Dev tool: run a streaming harness query through [[Harness.run]] and
+  * print its final StreamingQueryProgress — the state-store row/byte
+  * counts behind SURVEY §6's O(log²W) DGIM state audit.
   *
   * Usage: runMain graft.StateProbe <queryKey> <sfDir>
   */
 object StateProbe {
   def main(args: Array[String]): Unit = {
     val Array(key, dir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-state-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConfig.useSplittableWrites(spark)
-    val n = SparkEntry.queries(key)(spark, dir).count()
-    println(s"""{"query":"$key","rows":$n,"progress":${
-      graft.operators.StreamQueries.lastProgress.getOrElse("null")}}""")
+    val spark = Harness.session(Harness.cpus)
+    var n = 0L
+    Harness.run(spark, dir, Map(key -> SparkEntry.queries(key)),
+        Harness.flipsHeavyRows(spark, dir)) { (_, df) => n = df.count() }
+      .foreach { case (_, r) =>
+        println(s"""{"query":"$key","rows":$n,"progress":${
+          r.progress.getOrElse("null")}}""")
+      }
     spark.stop()
   }
 }

@@ -1,51 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // terminated harness streams' state stores unload on the
-      // maintenance tick — shortened so a full-suite run doesn't stack
-      // many rows' heap state before anything unloads (see Bench)
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // splittable row groups for every parquet this process writes
-    // (staged DumpCache artifacts, sink round-trips, result dumps) —
-    // content identical, scans of the artifacts parallelize (r20)
-    GraftConfig.useSplittableWrites(spark)
-    // same cached-plan AQE coalescing as Bench: the dump must execute
-    // the plans the bench times (r21)
-    GraftConfig.useAdaptiveCachedPlanPartitioning(spark)
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for targeted local checks; the
-    // driver sets no filter and always dumps the full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(keys) => SparkEntry.queries.filter { case (k, _) => keys(k) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // dumped — release the row's memory-sink view(s) so streaming
-      // results don't stack on the driver heap across the full suite,
-      // and the row's .cache() pins (per-row devices, never cross-row
-      // state — r20 ADVICE)
-      graft.operators.StreamQueries.releaseHarnessSinks()
-      spark.catalog.clearCache()
+    Harness.run(spark, sfDir, SparkEntry.queries,
+        Harness.flipsHeavyRows(spark, sfDir)) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

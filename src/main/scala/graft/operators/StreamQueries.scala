@@ -52,67 +52,29 @@ object StreamQueries {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Last finished harness query's final progress JSON — dev observability
-    * for state-size audits (SURVEY §6's O(log²W) state measurement reads
-    * `stateOperators.numRowsTotal` / `stateMemory` from here after a run).
+  /** What one harness row observes of the [[runToTable]] streams it
+    * runs. [[graft.Harness]] opens one scope per row with [[run]]:
+    * `stateStore` is the row's store override (None inherits the
+    * session's provider; Some("rocksdb") / Some("rocksdb-changelog")
+    * applies [[graft.GraftConfig.useRocksDbStateStore]] to each stream's
+    * cloned session), and each stream writes back the provider its clone
+    * resolved and its final `StreamingQueryProgress` JSON, so the last
+    * stream of the row is what the row reports. Structured Streaming
+    * ties a query to the session that started it, and every harness
+    * stream runs in its own clone, so what a row observes travels with
+    * the row: the scope is a DynamicVariable, visible only inside `run`
+    * on the calling thread and the threads it starts, and outside any
+    * scope a stream overrides and records nothing.
     */
-  @volatile var lastProgress: Option[String] = None
-
-  /** Harness state-store override for the [[runToTable]] streams built
-    * inside the dynamic scope: None (default) inherits the session's
-    * SparkConf provider (heap unless the caller configured otherwise);
-    * Some("rocksdb") / Some("rocksdb-changelog") applies
-    * [[graft.GraftConfig.useRocksDbStateStore]] to the cloned session.
-    * [[graft.Bench]] scopes this around the HEAVY-state rows at
-    * 100×-class corpus scale — the executable form of the shipped
-    * size-conditioned recommendation (flip when state outgrows heap
-    * headroom; r19 measured the flip 0.67-0.94× on exactly those rows
-    * at 100× and 1.2-2.8× AGAINST on small-state rows,
-    * bench_raw/r19/stateful100x_*.json). A DynamicVariable, not a
-    * shared var (r19 ADVICE): the override is visible only inside the
-    * caller's `withValue` scope (thread-inherited), so concurrent
-    * harness queries — parallel spec suites, a future parallel bench
-    * pass — can never observe another thread's flip.
-    */
-  private[graft] val harnessStateStore =
-    new scala.util.DynamicVariable[Option[String]](None)
-
-  /** The EFFECTIVE state-store provider of the most recent
-    * [[runToTable]] stream in this JVM, observed from the cloned
-    * session's resolved conf at start (not from what a caller intended
-    * to set). [[graft.Bench]] reads it after each streaming row and
-    * emits a per-row provider map into the bench JSON, so a committed
-    * 100× map itself proves which store each heavy row ran (r19
-    * verdict item 3). Observability only — nothing branches on it.
-    */
-  @volatile private[graft] var lastStateStore: Option[String] = None
-
-  /** Memory-sink tables published by [[runToTable]] in this JVM and not
-    * yet released: (cloned session, table name). A complete-mode sink
-    * holds its FULL result on the driver heap for as long as the temp
-    * view pins it — at the 100× fixture q_stream_session alone leaves
-    * ~9.5M rows (hundreds of MB) pinned after its row is consumed, and
-    * a full-suite run stacks every streaming row's sink on the heap
-    * (r20 optimization round). [[graft.Bench]] / [[graft.Verify]] call
-    * [[releaseHarnessSinks]] after consuming each row; ad-hoc callers
-    * that keep the returned frame simply don't release.
-    */
-  private val retainedSinks =
-    scala.collection.mutable.ArrayBuffer.empty[(SparkSession, String)]
-
-  /** Drop every harness memory-sink temp view registered since the last
-    * release, so the sinks' driver-held rows become collectable. Safe
-    * only once the caller is done with the returned DataFrames (their
-    * plans read the dropped sink).
-    */
-  def releaseHarnessSinks(): Unit = retainedSinks.synchronized {
-    retainedSinks.foreach { case (s, name) =>
-      try s.catalog.dropTempView(name) catch { case _: Exception => () }
-    }
-    retainedSinks.clear()
+  private[graft] final class RowScope(val stateStore: Option[String]) {
+    @volatile var provider: Option[String] = None
+    @volatile var progress: Option[String] = None
+    def run[A](body: => A): A = currentRow.withValue(Some(this))(body)
   }
 
-  private def runToTable(spark0: SparkSession, mode: String = "complete")(
+  private val currentRow = new scala.util.DynamicVariable[Option[RowScope]](None)
+
+  private[graft] def runToTable(spark0: SparkSession, mode: String = "complete")(
       build: SparkSession => DataFrame): DataFrame =
     runToTableSized(spark0, mode, 0L)(build)
 
@@ -160,11 +122,12 @@ object StreamQueries {
     val parts = math.max(8L,
       math.min(math.min(2L * cores, heapCap), inputBytes / (8L << 20))).toInt
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    harnessStateStore.value.foreach { p =>
+    val scope = currentRow.value
+    scope.flatMap(_.stateStore).foreach { p =>
       graft.GraftConfig.useRocksDbStateStore(spark,
         changelogCheckpointing = p != "rocksdb")
     }
-    lastStateStore = Some {
+    scope.foreach(_.provider = Some {
       val cls = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", "")
       if (cls == graft.GraftConfig.RocksDbProvider) {
@@ -172,22 +135,24 @@ object StreamQueries {
           ".changelogCheckpointing.enabled", "false")
         if (chg == "true") "rocksdb-changelog" else "rocksdb"
       } else "heap"
-    }
+    })
     val name = "mem_" + UUID.randomUUID().toString.replace("-", "")
     val ckptDir = harnessCheckpointDir(s"graft_ckpt_$name")
     val q = build(spark).writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow())
       .option("checkpointLocation", ckptDir).start()
-    // registered for release BEFORE the drain: if awaitTermination
-    // throws (the Bench -1-sentinel path), the partial sink result must
-    // still be droppable — registering after the drain leaked exactly
-    // the failed rows' sinks for the JVM lifetime (r20 ADVICE)
-    retainedSinks.synchronized { retainedSinks += ((spark, name)) }
+    // the returned frame holds the sink through its analyzed plan, so the
+    // temp view is dropped as soon as the sink is drained (also when the
+    // drain throws): the sink's in-memory rows then live exactly as
+    // long as the caller keeps the frame
     try {
       q.awaitTermination()
-      lastProgress = Option(q.lastProgress).map(_.json)
-    } finally deleteRecursively(new java.io.File(ckptDir))
-    spark.table(name)
+      scope.foreach(_.progress = Option(q.lastProgress).map(_.json))
+      spark.table(name)
+    } finally {
+      spark.catalog.dropTempView(name)
+      deleteRecursively(new java.io.File(ckptDir))
+    }
   }
 
   /** On-disk bytes of a source table file (or staged dump directory) —

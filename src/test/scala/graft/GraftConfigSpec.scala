@@ -491,7 +491,6 @@ class GraftConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
     def rows(s: SparkSession): (Seq[String], Long) = {
       val before = GraftConfigSpec.compiles
       val out = StreamQueries.streamDgimTumble(s, sf).collect().map(_.toString).sorted.toSeq
-      StreamQueries.releaseHarnessSinks()
       (out, GraftConfigSpec.compiles - before)
     }
     try {

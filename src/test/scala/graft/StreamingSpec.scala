@@ -818,11 +818,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "to the component gates") {
     import graft.operators.StreamQueries
     val dir = "/root/testdata/sf0.001"
-    val out = StreamQueries.streamAudit(spark, dir).collect()
+    val row = new StreamQueries.RowScope(None)
+    val out = row.run(StreamQueries.streamAudit(spark, dir)).collect()
     assert(out.nonEmpty)
     // stateless by construction: literal-weights margin + broadcast
     // gram probe + stream-static index probe hold NO state rows
-    val stateRows = StreamQueries.lastProgress.toSeq
+    val stateRows = row.progress.toSeq
       .flatMap(p => """"numRowsTotal"\s*:\s*(\d+)""".r
         .findAllMatchIn(p).map(_.group(1).toLong))
     assert(stateRows.sum === 0L, s"audit gate must hold no state, got $stateRows")
@@ -969,13 +970,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       (r.getAs[Long]("vec_id"), r.getAs[Long]("n_eval_hits"),
         r.getAs[Double]("best_cos"), r.getAs[Long]("witness_id"))
     val batch = Decontam.embedDecontam(spark, dir).collect().map(key).toSet
-    val stream = StreamQueries.streamEmbedDecontam(spark, dir)
+    val row = new StreamQueries.RowScope(None)
+    val stream = row.run(StreamQueries.streamEmbedDecontam(spark, dir))
       .collect().map(key).toSet
     assert(stream === batch,
       "per-arrival semantic gate diverged from the batch broadcast join")
     assert(stream.nonEmpty)
     // the gate is a pure map: no stateful operator may appear at all
-    val stateRows = StreamQueries.lastProgress.toSeq
+    val stateRows = row.progress.toSeq
       .flatMap("\"numRowsTotal\"\\s*:\\s*(\\d+)".r
         .findAllMatchIn(_).map(_.group(1).toLong)).sum
     assert(stateRows === 0L, s"expected a stateless plan, got $stateRows state rows")
@@ -1019,12 +1021,13 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         r.getAs[Double]("mean_pred"), r.getAs[Long]("ece_num"),
         r.getAs[Double]("ece"))
     val batch = Profile.statsCalibration(spark, dir).collect().map(key).toSet
-    val stream = StreamQueries.streamCalibration(spark, dir).collect().map(key).toSet
+    val row = new StreamQueries.RowScope(None)
+    val stream = row.run(StreamQueries.streamCalibration(spark, dir)).collect().map(key).toSet
     assert(stream === batch,
       "continuous calibration grid diverged from batch train+evaluate")
     assert(stream.nonEmpty && stream.size <= 10)
     // complete-mode grid state = one row per occupied bin, never corpus-sized
-    val stateRows = StreamQueries.lastProgress.toSeq
+    val stateRows = row.progress.toSeq
       .flatMap("\"numRowsTotal\"\\s*:\\s*(\\d+)".r
         .findAllMatchIn(_).map(_.group(1).toLong)).sum
     assert(stateRows > 0 && stateRows <= 10,
@@ -1040,10 +1043,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         r.getAs[Double]("recall"), r.getAs[Double]("f1"),
         r.getAs[Double]("accuracy"))
     val batch = Profile.statsConfusion(spark, dir).collect().map(key).toSet
-    val stream = StreamQueries.streamConfusion(spark, dir).collect().map(key).toSet
+    val row = new StreamQueries.RowScope(None)
+    val stream = row.run(StreamQueries.streamConfusion(spark, dir)).collect().map(key).toSet
     assert(stream === batch && stream.size === 1,
       "continuous confusion cells diverged from batch train+evaluate")
-    val stateRows = StreamQueries.lastProgress.toSeq
+    val stateRows = row.progress.toSeq
       .flatMap("\"numRowsTotal\"\\s*:\\s*(\\d+)".r
         .findAllMatchIn(_).map(_.group(1).toLong)).sum
     assert(stateRows === 1L, s"expected ONE counter state row, got $stateRows")
@@ -1076,11 +1080,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath,
       java.nio.file.Paths.get(s"$tmp/embeddings.parquet"))
-    val gate = StreamQueries.streamSemDedup(spark, tmp, k = 2).collect()
+    val row = new StreamQueries.RowScope(None)
+    val gate = row.run(StreamQueries.streamSemDedup(spark, tmp, k = 2)).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("is_kept")).toMap
     assert(gate === Map(20L -> 1, 30L -> 0, 50L -> 1, 60L -> 1),
       s"gate verdicts $gate")
-    val stateRows = StreamQueries.lastProgress.toSeq
+    val stateRows = row.progress.toSeq
       .flatMap("\"numRowsTotal\"\\s*:\\s*(\\d+)".r
         .findAllMatchIn(_).map(_.group(1).toLong)).sum
     assert(stateRows === 0L, s"admission gate must be stateless, got $stateRows")
